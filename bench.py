@@ -2,7 +2,7 @@
 """Benchmark: run the headline queries and print ONE JSON line.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the cores in the affinity mask).
 Output: {"metric": ..., "value": total_sec, "unit": "sec",
          "queries": {name: sec, ...}, "sf": ...}
 """
@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from map_reduce_c_sharp_simulation_multithreaded_spark import buildstats
 from map_reduce_c_sharp_simulation_multithreaded_spark.plans import registry
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
+    default_cpus,
     get_spark,
     host_speed_probe,
     host_speed_probe_single,
@@ -174,13 +175,10 @@ HEAVY_REPORT = ("dedup_exact_substr_spans", "graph_pagerank_suppliers")
 
 
 def effective_cpus() -> int:
-    """The resolved SPARK_GRAFT_CPUS grant — what session.get_spark
-    builds local[N] from. Reported as "cpus" in the stdout JSON so the
-    driver's core-scaling probe sees the grant it set, not the
-    machine's core count (VERDICT r14 next-round #3: the r14 scaling
-    block false-flagged suspect_cpus_ignored because both the 8- and
-    32-core runs reported os.cpu_count() == 32)."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """The resolved core grant that session.get_spark builds local[N]
+    from. Reported as "cpus" in the stdout JSON so a core-scaling probe
+    sees the grant it set, not os.cpu_count()."""
+    return default_cpus()
 
 
 def prior_bench_paths(repo: str) -> list[str]:

@@ -10,7 +10,10 @@ as explicit, tested modes rather than accidents (SURVEY.md §7.3):
   duplicates → ``dedup_dim_last_wins``.
 * unmatched probe keys: the reference THROWS (``D/Program.cs:310``,
   referential-integrity assumption); Spark's inner join silently drops
-  → ``strict_inner_join``.
+  → ``strict_inner_join`` for row-returning callers, and
+  ``strict_join_agg`` for a join feeding an aggregate, which folds the
+  check into the aggregate so the join is evaluated once, as the
+  reference's single probe pass is.
 """
 
 from __future__ import annotations
@@ -50,9 +53,11 @@ def strict_inner_join(
     Reproduces the reference's referential-integrity assumption — its
     probe throws ``KeyNotFoundException`` on a missing dimension key
     (``D/Program.cs:310``) — as a distributed check: a left-anti probe
-    for violations (cheap; stops at the first match via ``take(1)``),
-    then the ordinary inner join. Both passes are full Spark plans; no
-    driver-side row state.
+    for violations (stops at the first match via ``take(1)``), then the
+    ordinary inner join. The check and the caller's later action each
+    evaluate the join, so a caller that aggregates the join should use
+    :func:`strict_join_agg`, which evaluates it once. No driver-side row
+    state.
     """
     violations = probe.join(build, on, "left_anti").take(1)
     if violations:
@@ -60,6 +65,43 @@ def strict_inner_join(
             f"strict join: probe row without build match: {violations[0]}"
         )
     return probe.join(build, on, how)
+
+
+def strict_join_agg(
+    probe: DataFrame,
+    build: DataFrame,
+    on: str | list[str],
+    group_by: list[Column],
+    aggs: list[Column],
+) -> DataFrame:
+    """``probe ⋈ build`` grouped by ``group_by`` into ``aggs``; FAILS if
+    any probe row has no build match.
+
+    The same contract as :func:`strict_inner_join` followed by
+    ``groupBy(*group_by).agg(*aggs)``, in one evaluation: the probe is
+    left-joined to ``build`` carrying a constant ``_hit`` marker, and the
+    aggregate also groups by whether the marker matched, keeping the
+    smallest unmatched key. That aggregate has at most two rows per
+    group, so it is materialized once (``localCheckpoint``);
+    the violation probe reads one row of it, and the returned matched
+    groups are read from it too, so the caller's action does not scan
+    or join again. Raises before returning, so a sink written from the
+    result never runs on a violation.
+    """
+    keys = [on] if isinstance(on, str) else list(on)
+    matched = F.col("_hit").isNotNull()
+    agg = (
+        probe.join(build.withColumn("_hit", F.lit(True)), keys, "left")
+        .groupBy(*group_by, matched.alias("_matched"))
+        .agg(*aggs, F.min(F.when(~matched, F.struct(*keys))).alias("_missing"))
+        .localCheckpoint()
+    )
+    missing = agg.filter(~F.col("_matched")).select("_missing").take(1)
+    if missing:
+        raise ValueError(
+            f"strict join: probe row without build match: {missing[0][0]}"
+        )
+    return agg.filter(F.col("_matched")).drop("_matched", "_missing")
 
 
 def salted_join(

@@ -421,9 +421,10 @@ def doc_term_stats_rows(
     folded before the Python boundary (r15, guide §4.2 — the
     ``term_counts_rows`` pattern specialized to a literal vocabulary,
     motivated by the bm25 docstats stage). Tokenization stays
-    ``tokens()`` in the JVM; ``list.count`` is the exact integer twin
-    of ``sum((term == t).cast long)``; docs with zero tokens emit no
-    row, like the explode+groupBy form."""
+    ``tokens()`` in the JVM; one ``Counter`` per document gives the
+    exact integer ``sum((term == t).cast long)`` for every term in
+    O(dl + |terms|); docs with zero tokens emit no row, like the
+    explode+groupBy form."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     tok = tokens(F.lower(F.col(text_col)) if lower else F.col(text_col))
@@ -440,6 +441,8 @@ def doc_term_stats_rows(
     )
 
     def run(batches):
+        from collections import Counter
+
         import pyarrow as pa
 
         for batch in batches:
@@ -453,8 +456,9 @@ def doc_term_stats_rows(
                     continue
                 idx.append(i)
                 dls.append(len(tk))
+                counts = Counter(tk)
                 for j, t in enumerate(terms):
-                    tfs[j].append(tk.count(t))
+                    tfs[j].append(counts[t])
             if not idx:
                 continue
             yield pa.RecordBatch.from_arrays(

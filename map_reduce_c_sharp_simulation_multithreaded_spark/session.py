@@ -19,6 +19,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """The ``local[N]`` core grant: ``SPARK_GRAFT_CPUS`` when set, else
+    the cores in this process's affinity mask."""
+    grant = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(grant) if grant else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "mrcs_spark",
     cpus: int | None = None,
@@ -26,7 +33,7 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) a local SparkSession tuned for this workload."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 16)
     builder = (

@@ -15,7 +15,8 @@ Reproduces the reference's CSV semantics (SURVEY.md §1.4, FIXTURES.md
 * duplicate Donor ID keeps the LAST occurrence (``D/Program.cs:296``)
   → keep-last window over file position;
 * missing Donor ID on the probe side THROWS (``D/Program.cs:310``)
-  → strict mode via ``strict_inner_join``.
+  → strict mode via ``strict_join_agg``: one evaluation computes the
+  per-state sums and the missing-key check together.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.joins import strict_inner_join
+from ..operators.joins import strict_join_agg
 from ..schemas import DONATIONS_CSV, DONORS_CSV
 
 
@@ -119,19 +120,20 @@ def donations_by_state(
 
     donations ⋈ donors on Donor ID → GROUP BY Donor State →
     SUM(coalesce(amount, 0.0)). ``strict=True`` reproduces the
-    missing-key throw; ``strict=False`` is the inner-join-drop mode.
+    missing-key throw: it evaluates the join and aggregate here, once,
+    and raises before returning; the result is read back from that
+    evaluation. ``strict=False`` is the lazy inner-join-drop mode.
     """
     dim = dedup_donors_last_wins(donors).select("Donor ID", "Donor State")
     fact = donations.select(
         "Donor ID",
         F.coalesce(F.col("Donation Amount"), F.lit(0.0)).alias("_amount"),
     )
-    join = strict_inner_join if strict else (lambda p, b, on: p.join(b, on, "inner"))
-    joined = join(fact, dim, "Donor ID")
-    return (
-        joined.groupBy(F.col("Donor State").alias("State"))
-        .agg(F.sum("_amount").alias("Total Donation Amount"))
-    )
+    by_state = [F.col("Donor State").alias("State")]
+    total = [F.sum("_amount").alias("Total Donation Amount")]
+    if strict:
+        return strict_join_agg(fact, dim, "Donor ID", by_state, total)
+    return fact.join(dim, "Donor ID", "inner").groupBy(*by_state).agg(*total)
 
 
 def read_reference_tokenstream(

@@ -88,6 +88,67 @@ def test_result_csv_f2_rendering(spark, csv_paths, tmp_path):
     assert body == ["NY,29.50", "TX,100.50", "other,10.00"]
 
 
+def _by_state(df):
+    return {r.State: r["Total Donation Amount"] for r in df.collect()}
+
+
+def test_strict_equals_non_strict_when_ri_holds(spark, csv_paths):
+    donors_path, donations_path, _ = csv_paths
+    donors = read_donors(spark, donors_path)
+    donations = read_donations(spark, donations_path)
+    assert _by_state(donations_by_state(donors, donations, strict=True)) == (
+        _by_state(donations_by_state(donors, donations, strict=False))
+    )
+
+
+def test_strict_keeps_null_state_group(spark, tmp_path):
+    """A donor whose Donor State field is empty parses NULL; the donor
+    still exists, so strict mode does not raise, and the NULL-State
+    group survives exactly as in the non-strict inner join."""
+    donors_path = tmp_path / "donors.csv"
+    donors_path.write_text(DONORS + "d4,Nowhere,,No,\n")
+    donations_path = tmp_path / "donations.csv"
+    donations_path.write_text(DONATIONS + "p6,x6,d4,No,7.00,1\n")
+    donors = read_donors(spark, str(donors_path))
+    donations = read_donations(spark, str(donations_path))
+    strict = _by_state(donations_by_state(donors, donations, strict=True))
+    assert strict[None] == 7.0
+    assert strict == _by_state(donations_by_state(donors, donations, strict=False))
+
+
+def test_strict_raises_on_empty_donor_id_before_sink(spark, tmp_path):
+    """An empty Donor ID parses NULL, which matches no donor: strict
+    mode raises inside donations_by_state, so the sink never runs and
+    its target directory is never created."""
+    donors_path = tmp_path / "donors.csv"
+    donors_path.write_text(DONORS)
+    donations_path = tmp_path / "donations.csv"
+    donations_path.write_text(DONATIONS + "p6,x6,,No,7.00,1\n")
+    out_dir = tmp_path / "result"
+    with pytest.raises(ValueError, match="strict join"):
+        result = donations_by_state(
+            read_donors(spark, str(donors_path)),
+            read_donations(spark, str(donations_path)),
+            strict=True,
+        )
+        write_result_csv(result, str(out_dir))
+    assert not out_dir.exists()
+
+
+def test_strict_result_does_not_rescan_sources(spark, csv_paths):
+    """The strict result is read from the one evaluation that ran the
+    check: its executed plan scans no file, so a sink written from it
+    does not run the join a second time."""
+    donors_path, donations_path, _ = csv_paths
+    result = donations_by_state(
+        read_donors(spark, donors_path),
+        read_donations(spark, donations_path),
+        strict=True,
+    )
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan
+
+
 def _reference_tokenizer(lines: list[str]) -> list[str]:
     """Direct Python transcription of IOHelper.ReadNextToken
     (D/Program.cs:549-571): line-buffered token pull with the

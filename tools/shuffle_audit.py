@@ -52,6 +52,7 @@ from pyspark.sql import SparkSession
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.plans import registry
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
+    default_cpus,
     host_speed_probe,
 )
 
@@ -69,7 +70,7 @@ SKIP = {
 
 def audit_session() -> SparkSession:
     """get_spark's confs with the UI (REST metrics source) enabled."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("mrcs_shuffle_audit")
