@@ -2,15 +2,15 @@
 
 A query is (name, PySpark callable, optional DuckDB oracle SQL). The
 oracle is the independent differential-testing engine (SURVEY.md §5.2):
-the driver runs both at sf0.01 and compares row count + schema +
-order-insensitive value hash. Column names are aliased identically on
-both sides; double aggregates are rounded identically on both sides so
-float-summation order differences (reference sums in arbitrary order
-too, ``D/Program.cs:162,315``) cannot flip the hash.
+``tests/test_oracle_parity.py`` runs both on every registered query
+and compares row count + schema + order-insensitive value hash. Column
+names are aliased identically on both sides; double aggregates are
+rounded identically on both sides so float-summation order differences
+(reference sums in arbitrary order too, ``D/Program.cs:162,315``)
+cannot flip the hash.
 
-Queries with ``oracle=None`` are genuinely non-SQL-expressible
-(stateful streaming, probabilistic LSH) and get the driver's weaker
-rows-only check plus dedicated pytest coverage.
+Queries with ``oracle=None`` would get only a rows-materialize check;
+``tests/test_oracle_parity.py`` keeps the registry free of them.
 
 ``oracle`` may also be a CALLABLE ``(sf_dir: str) -> str`` for oracles
 whose SQL depends on the data (e.g. a trained-codebook ANN query: the
@@ -90,155 +90,10 @@ def _load_all_plan_modules() -> None:
     )
 
 
-# The round driver verifies only the FIRST 50 entries of ``queries()``
-# insertion order against the DuckDB oracle (observed in round 1:
-# CORRECTNESS_r01.json is exactly the first 50 registrations). Ordering
-# is therefore a coverage decision, not cosmetics: this list pins the
-# verification window to the queries that most need fresh driver
-# evidence, rotated each round until every oracle-backed query has had
-# a green driver row.
-#
-# Two structural gates keep this rotation honest: the
-# plan-fingerprint gate (tests/test_plan_freshness.py +
-# PLAN_HASHES.json) FAILS the suite if a changed plan is not in this
-# tuple, and the evidence-age gate (tests/test_evidence_age.py) FAILS
-# it if any query's latest driver row is older than two rounds without
-# a slot here — with positions 51+ admitting exactly ONE round of
-# deferral. (Earlier rotations' reasoning lives in git history.)
-DRIVER_WINDOW: tuple[str, ...] = (
-    # --- ROUND-15 WINDOW (rotated at r15, optimization round 2 of 2;
-    # VERDICT r14 "Next round" item 2). Mandatory verified slots:
-    #   A (slots 1-9): the nine r10-evidence queries whose one-round
-    #     deferral bound expired at positions 51-59 of the r14 tuple
-    #     (test_evidence_age.py forces them into the first 50).
-    #   B (slots 10-17): the eight r14 changed-plan queries that rode
-    #     overflow positions 60-67 — VERDICT r14's explicit promotion
-    #     mandate: their post-rewrite shapes get driver-channel oracle
-    #     rows this round.
-    #   C (slots 18-26): this round's own plan changes (the r15
-    #     optimization rewrites — term_counts/doc-stats folds for the
-    #     retrieval family, the span-family Arrow batch-capping, the
-    #     DSIR/gopher consumers of the hardened helpers, the jaccard
-    #     shingle port) — changed-plan beats stale-but-unchanged, the
-    #     standing adjudication.
-    #   D (slots 27-50): 24 of the 46 remaining r11-evidence queries.
-    #     Chosen: the surfaces whose correctness rides machinery NO
-    #     fuzz grammar or bench number covers — the float/stateful
-    #     ANN+similarity set, the whole events family, the
-    #     pandas-UDAF/python-source/multimodal custom boundaries,
-    #     fuzzy join/contamination, plus the three trickiest TPC-H
-    #     semantics (q8 float shares, q21 multi-existential, q22
-    #     substring anti-join) and scalar_try_arithmetic.
-    # The 22 r11-evidence queries NOT promoted (16 mid-family TPC-H +
-    # the six window packs) ride overflow positions 51-72 — legal for
-    # exactly this one round (bound: evidence ≥ r11) — because their
-    # alternative coverage is the strongest in the registry: plan
-    # hashes stable for ≥ 4 rounds, dedicated pytest suites
-    # (test_tpch*.py, window tests), and six of them timed every round
-    # in EXTRA_BENCH/headline. Registry-wide: every query outside the
-    # tuple carries r12+ evidence (age floor after this commit: r12).
-    # --- A: the nine expired r10-evidence deferrals ---
-    "distinct_pairs",
-    "orderby_limit_topk",
-    "subquery_scalar_avg",
-    "scalar_math_pack",
-    "scalar_date_pack",
-    "scalar_conditional_pack",
-    "scalar_json_pack",
-    "scalar_map_explode",
-    "scalar_posexplode_words",
-    # --- B: the eight r14 changed-plan promotions (VERDICT mandate) ---
-    "dedup_connected_components",
-    "curation_cluster_keep_best",
-    "split_cluster_leakage_safe",
-    "text_gopher_quality",
-    "tpch_q2_min_cost_supplier",
-    "dedup_simhash_signatures",
-    "dedup_simhash_band_pairs",
-    "text_tfidf_topk",
-    # --- C: the r15 optimization-round plan changes ---
-    "text_inverted_index",
-    "text_bm25_topk",
-    "retrieval_hybrid_rrf",
-    "dedup_jaccard_prefix_join",
-    "dedup_exact_substr_spans",
-    "dedup_cut_spans",
-    "contamination_span_overlap",
-    "contamination_cut_spans",
-    "curation_dsir_importance",
-    # --- D: 24 promoted r11-evidence queries (see header) ---
-    "sim_cosine_topk",
-    "sim_lsh_bucket_histogram",
-    "sim_ivf_ann_topk",
-    "sim_ivfpq_topk",
-    "dedup_semantic_clusters_trained",
-    "events_funnel_view_click_purchase",
-    "events_cohort_retention",
-    "events_time_to_convert",
-    "events_transition_matrix",
-    "events_rolling_wau",
-    "events_longest_streak",
-    "events_session_funnel_attribution",
-    "pandas_udaf_weighted_avg",
-    "pysource_synthetic_agg",
-    "multimodal_decode_features",
-    "contamination_fuzzy_minhash",
-    "join_fuzzy_levenshtein",
-    "quality_constraint_audit",
-    "text_token_stats",
-    "agg_median_percentile",
-    "scalar_try_arithmetic",
-    "tpch_q8_market_share",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity",
-    # --- positions 51-72: the 22 r11-evidence deferrals (one round,
-    # bound-legal; strongest alternative coverage in the registry —
-    # see header) ---
-    "tpch_q5_local_supplier_volume",
-    "tpch_q10_returned_items",
-    "tpch_q18_large_orders",
-    "tpch_q12_late_lines",
-    "tpch_q14_promo_revenue",
-    "tpch_q19_disjunctive_filter",
-    "tpch_q7_nation_volume",
-    "tpch_q16_supplier_variety",
-    "tpch_q20_excess_shippers",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_parts",
-    "window_topk_per_customer",
-    "window_running_total",
-    "window_lag_lead",
-    "window_rank_dense_ntile",
-    "window_range_frame_30d",
-    "window_first_last",
-)
-
-
-
-def registration_order() -> list[str]:
-    """Query names in raw REGISTRATION order — stable across
-    DRIVER_WINDOW rotations, which reorder :func:`all_queries`. The
-    plan-fingerprint tool iterates in this order so a window edit can
-    never shift cache-state-dependent plan hashes of unrelated
-    queries."""
-    _load_all_plan_modules()
-    return list(_REGISTRY)
-
-
 def all_queries() -> dict[str, Query]:
-    """Registry in driver-verification order: DRIVER_WINDOW first, then
-    everything else in registration order."""
+    """Every registered query, in registration order."""
     _load_all_plan_modules()
-    missing = [n for n in DRIVER_WINDOW if n not in _REGISTRY]
-    if missing:  # a typo here would silently shrink driver coverage
-        raise KeyError(f"DRIVER_WINDOW names not registered: {missing}")
-    rest = [n for n in _REGISTRY if n not in set(DRIVER_WINDOW)]
-    return {n: _REGISTRY[n] for n in (*DRIVER_WINDOW, *rest)}
+    return dict(_REGISTRY)
 
 
 def headline_queries() -> dict[str, Query]:

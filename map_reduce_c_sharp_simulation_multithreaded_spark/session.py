@@ -138,8 +138,9 @@ def pin_session(spark: SparkSession) -> SparkSession:
     # local test scales badly (iterative plans fan to 400-task stages);
     # respect any explicit non-default choice, fix only the default
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(cpus, 16)))
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(max(default_cpus(), 16))
+        )
     _ship_package(spark)
     return spark
 

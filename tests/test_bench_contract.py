@@ -74,6 +74,28 @@ def test_effective_cpus_reads_the_grant(monkeypatch):
     assert effective_cpus() == len(os.sched_getaffinity(0))
 
 
+def test_pin_session_sizes_stock_partitions_from_the_grant(
+    spark, monkeypatch
+):
+    """A foreign session at Spark's stock 200 shuffle partitions is
+    resized from the same core grant as ``get_spark``: the affinity
+    mask when SPARK_GRAFT_CPUS is unset, floored at 16."""
+    from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
+        pin_session,
+    )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        pin_session(spark)
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == max(
+            len(os.sched_getaffinity(0)), 16
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_prior_bench_paths_skip_side_artifacts(tmp_path):
     """The headline watch compares against the newest MAIN-channel
     artifact; BENCH_r14_c8.json (8-core probe) sorts after

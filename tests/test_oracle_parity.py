@@ -56,28 +56,12 @@ def test_collect_sorted_array(spark, sf_dir):
         assert r.nations == sorted(r.nations) and len(r.nations) == 5
 
 
-def test_driver_window_is_oracle_backed():
-    """Every slot in the driver's verification window must be an
-    oracle-backed query — a rows-only entry there wastes a slot.
-    As of round 5 the registry carries ZERO rows-only queries: the
-    MinHash/SimHash family runs the md5-derived oracle-mode hash
-    family and the trained-IVF query generates its oracle from the
-    pure-Python training replay (VERDICT.md r4 next-round #2-#4).
-
-    The window may carry MORE than 50 names (a late-round debut parks
-    at position 51 to ride the NEXT round's free slot — the driver
-    verifies only the first 50), but never fewer, and the registry
-    must lead with the window in order so the driver's first-50 cut
-    is exactly the intended queue."""
-    qs = registry.all_queries()
-    window = list(registry.DRIVER_WINDOW)
-    assert len(window) >= 50
-    # a duplicated name would collapse silently in all_queries()'s
-    # dict construction, shifting every later entry one slot earlier
-    # and pushing the 50th intended query OUT of the verified window
-    assert len(set(window)) == len(window), "DRIVER_WINDOW has duplicates"
-    assert list(qs)[: len(window)] == window
-    assert [n for n in qs if qs[n].oracle is None] == []
+def test_every_query_is_oracle_backed():
+    """No registered query may fall back to the rows-only smoke check in
+    :func:`test_query_matches_oracle`: the MinHash/SimHash family runs
+    the md5-derived oracle-mode hash family and the trained-IVF query
+    generates its oracle from the pure-Python training replay."""
+    assert [n for n, q in ALL.items() if q.oracle is None] == []
 
 
 def test_winnowing_short_docs(spark, tmp_path):

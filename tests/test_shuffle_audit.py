@@ -5,8 +5,7 @@ holds the measured shuffle/scan volume for every batch query, and the
 claims SCALE.md builds on it only stay true while the artifact covers
 the registry. This gate fails when a query debuts (or is renamed)
 without re-running ``tools/shuffle_audit.py --json SHUFFLE_AUDIT.json``
-— the same add-consciously contract as the sweep's regression gate
-and the plan-freshness window.
+— the same add-consciously contract as the sweep's regression gate.
 """
 
 from __future__ import annotations

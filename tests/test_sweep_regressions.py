@@ -62,8 +62,9 @@ ALLOWLIST: dict[str, str] = {
     # 0.601 s), so the r14 value (~1.0-1.1 s) reads as >1.5x against
     # that floor while sitting at the top of its own four-round band.
     # The plan is PROVABLY unchanged this round: the r14 optimization
-    # commits' PLAN_HASHES.json diffs list exactly the twelve queries
-    # §A of OPTIMIZATION_r14.md rewrote, and this is not one of them.
+    # commits' plan-fingerprint snapshot diffs (git history) list
+    # exactly the twelve queries §A of OPTIMIZATION_r14.md rewrote,
+    # and this is not one of them.
     # Epoch on a sub-second query, not plan cost (the same class as
     # the retired r9/r10 entries above); its plan-shape lever is
     # queued in OPTIMIZATION_r14.md "Not yet optimized".

@@ -139,19 +139,13 @@ def main() -> int:
         else:
             df.write.format("noop").mode("overwrite").save()
 
-    # REGISTRATION order, not queries() order: queries() leads with the
-    # rotating DRIVER_WINDOW, so a rotation moves a block of queries to
-    # the front of the sweep where the JVM has accumulated less JIT —
-    # observed round 7: the newly-fronted TPC-H block measured
-    # +0.1-0.2 s (1.3-1.5×) while the sweep median was 0.94×.
-    # Registration order is stable across rotations, so round-over-
-    # round diffs compare each query at the same session age.
+    # Registration order, so round-over-round diffs compare each query
+    # at the same session age (JIT warmth grows along the sweep).
     qs = registry.all_queries()
     res: dict[str, tuple[float, float]] = {}
     builds: dict[str, list[dict]] = {}
     buildstats.drain()  # clear anything a prior import-time path left
-    for name in registry.registration_order():
-        q = qs[name]
+    for name, q in qs.items():
         ts: list[float] = []
         for _ in range(args.passes):
             t0 = time.perf_counter()

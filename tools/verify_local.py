@@ -57,15 +57,10 @@ def main() -> int:
     ap.add_argument("--query", action="append", default=None)
     ap.add_argument("--lint-only", action="store_true",
                     help="run only the oracle DESCRIBE type lint")
-    ap.add_argument("--window", action="store_true",
-                    help="verify exactly the DRIVER_WINDOW set (what the "
-                         "round driver will check)")
     args = ap.parse_args()
 
     con = ora.duckdb_connect(args.sf)
     qs = registry.all_queries()
-    if args.window:
-        qs = {n: qs[n] for n in registry.DRIVER_WINDOW}
     if args.query:
         qs = {n: q for n, q in qs.items() if n in set(args.query)}
 
