@@ -12,11 +12,16 @@ Scale design (the whole point at 100 TB):
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType
 
-from .text import _MEMO_CAP, tokens, word_shingles
+from .arrow_fold import arrow_fold, per_doc
+from .text import md5hash60_py, tokens, word_shingles
 
 # Mersenne prime 2^31-1: min-hash permutation modulus. Hashes are reduced
 # below 2^31 before the permutation multiply so a*h+b stays well under
@@ -415,73 +420,29 @@ def jaccard_prefix_join_pairs(
 
 
 def _simhash_md5_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash) for the md5 oracle mode, vectorized (r14, guide
-    §4.2): token arrays are produced by the JVM ``tokens()`` (no
-    tokenizer-semantics risk) and cross to Python unchanged; per doc,
-    each token occurrence's :func:`md5hash60` (hashlib.md5 reproduces
-    it bit-for-bit, memoized — vocabularies are tiny next to token
-    counts) votes ±1 per bit, and the sign bits reassemble into the
-    identical long the 60-way aggregate computed. Docs with zero
-    tokens emit no row, exactly like the explode+groupBy form."""
-    import hashlib
+    """(id, simhash) for the md5 oracle mode, vectorized: token arrays
+    are produced by the JVM ``tokens()`` (no tokenizer-semantics risk)
+    and cross to Python unchanged; per doc, each token occurrence's
+    :func:`md5hash60` (``md5hash60_py`` reproduces it bit-for-bit)
+    votes ±1 per bit, and the sign bits reassemble into the identical
+    long the 60-way aggregate computed. Docs with zero tokens emit no
+    row, exactly like the explode+groupBy form."""
+    bit_idx = np.arange(60, dtype=np.uint64)
 
-    from pyspark.sql.types import LongType, StructField, StructType
+    def simhash(tk):
+        if not tk:
+            return None
+        hs = np.fromiter((md5hash60_py(t) for t in tk), np.uint64, len(tk))
+        bits = (hs[:, None] >> bit_idx) & np.uint64(1)
+        votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
+        return ([int(((votes > 0).astype(np.uint64) << bit_idx).sum())],)
 
-    src = df.select(
-        F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk")
+    return arrow_fold(
+        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_tk")),
+        id_col,
+        [("simhash", LongType())],
+        per_doc(simhash, 1),
     )
-    schema = StructType(
-        [
-            StructField(id_col, src.schema["_id"].dataType, True),
-            StructField("simhash", LongType(), False),
-        ]
-    )
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        # BOUNDED per-task memo (ADVICE r14): distinct tokens grow
-        # with partition text volume, so an uncapped dict has no
-        # ceiling on a 100 TB-scale task over adversarial vocabulary.
-        # md5 of a short string is cheap — on overflow just reset and
-        # keep the Zipf head hot again within one batch.
-        memo: dict[str, int] = {}
-
-        def h60(t: str) -> int:
-            v = memo.get(t)
-            if v is None:
-                if len(memo) >= _MEMO_CAP:
-                    memo.clear()
-                v = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                memo[t] = v
-            return v
-
-        bit_idx = np.arange(60, dtype=np.uint64)
-        for batch in batches:
-            ids = batch.column(0)
-            tks = batch.column(1).to_pylist()
-            idx: list[int] = []
-            sims: list[int] = []
-            for i, tk in enumerate(tks):
-                if not tk:
-                    continue
-                hs = np.fromiter(
-                    (h60(t) for t in tk), np.uint64, len(tk)
-                )
-                bits = (hs[:, None] >> bit_idx) & np.uint64(1)
-                votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-                sim = int(((votes > 0).astype(np.uint64) << bit_idx).sum())
-                idx.append(i)
-                sims.append(sim)
-            if not idx:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(idx)), pa.array(sims, pa.int64())],
-                names=[id_col, "simhash"],
-            )
-
-    return src.mapInArrow(run, schema)
 
 
 def simhash64(
@@ -494,9 +455,9 @@ def simhash64(
     row-wise UDFs. Production signatures are 64-bit xxhash64;
     ``hash_mode="md5"`` switches to the 60-bit engine-replayable family
     (:func:`md5hash60`) so the signature query carries a full DuckDB
-    oracle — and, since r14, runs the vectorized
-    :func:`_simhash_md5_rows` path (identical longs: hashlib.md5
-    reproduces md5hash60, the vote is the same ±1 sum)."""
+    oracle and runs the vectorized :func:`_simhash_md5_rows` path
+    (identical longs: ``md5hash60_py`` reproduces md5hash60, the vote
+    is the same ±1 sum)."""
     if hash_mode == "md5":
         return _simhash_md5_rows(df, id_col, text_col)
     n_bits = _sig_bits(hash_mode)
@@ -735,8 +696,6 @@ _GRAM_BINV = pow(_GRAM_B, -1, 1 << 64)  # modular inverse mod 2^64
 
 def _splitmix64_np(z):
     """splitmix64 finalizer over a ``numpy.uint64`` array (bijective)."""
-    import numpy as np
-
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
@@ -758,8 +717,6 @@ def _prefix_window_hashes(texts: list, L: int):
     per emitted window, 0-based position within its text, finalized
     uint64 hash.
     """
-    import numpy as np
-
     lens = np.fromiter((len(t) for t in texts), np.int64, len(texts))
     total = int(lens.sum())
     empty = (np.empty(0, np.int64),) * 2 + (np.empty(0, np.uint64),)
@@ -793,31 +750,19 @@ def _prefix_window_hashes(texts: list, L: int):
         return row_idx, local_p0, _splitmix64_np(raw)
 
 
-def _rolling_hash_batches(min_len: int):
-    """mapInArrow body: (_id, _text) batches → (_id, _p, _h) rows, one
-    :func:`_prefix_window_hashes` pass per Arrow batch."""
-    L = min_len
+# (position, gram-or-hash) output fields of the gram-position folds
+_GRAM_FIELDS = [("_p", LongType()), ("_g", StringType())]
+_HASH_FIELDS = [("_p", LongType()), ("_h", LongType())]
 
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
 
-        for batch in batches:
-            ids = batch.column(0)
-            texts = ["" if t is None else t for t in batch.column(1).to_pylist()]
-            row_idx, local_p0, hashes = _prefix_window_hashes(texts, L)
-            if len(hashes) == 0:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(row_idx)),
-                    pa.array(local_p0 + 1, pa.int64()),
-                    pa.array(hashes.view(np.int64)),
-                ],
-                names=["_id", "_p", "_h"],
-            )
-
-    return run
+def _rolling_hash_rows(min_len: int, texts: list):
+    """Batch fold: (_p, _h) rows of every ``min_len``-char window, one
+    :func:`_prefix_window_hashes` pass per Arrow batch; null texts emit
+    nothing."""
+    row_idx, local_p0, hashes = _prefix_window_hashes(
+        ["" if t is None else t for t in texts], min_len
+    )
+    return row_idx, [local_p0 + 1, hashes.view(np.int64)]
 
 
 def gram_hash(col: Column) -> Column:
@@ -830,8 +775,6 @@ def gram_hash(col: Column) -> Column:
 
     @F.pandas_udf("long")
     def _hash_series(s: pd.Series) -> pd.Series:
-        import numpy as np
-
         texts = ["" if t is None else t for t in s.tolist()]
         lens = np.fromiter((len(t) for t in texts), np.int64, len(texts))
         out = np.zeros(len(texts), np.uint64)
@@ -862,86 +805,17 @@ def _hashed_gram_positions(
 ) -> DataFrame:
     """(_id, _p, _h): 64-bit rolling hash of every position's
     ``min_len``-char gram, computed in ONE vectorized numpy pass per
-    Arrow batch inside ``mapInArrow`` (guide §4.2 shape: Spark does
-    distribution and shuffles, native vectorized code does the per-
-    byte work). The previous JVM HOF form paid O(L) compiled work + 3
-    interpreted node-evals per position (xxhash64 over a 50-element
-    array slice); the prefix-sum rolling form pays O(1) amortized per
-    position, and the hash swap is result-invariant because every
+    Arrow batch (Spark does distribution and shuffles, native
+    vectorized code does the per-byte work): O(1) amortized per
+    position. The hash family is result-invariant because every
     consumer literal-verifies the candidate tail (see ``_GRAM_B``).
-    Output schema matches the old form exactly: positions 1-based,
-    null/short texts emit no rows, ``_h`` a signed 64-bit long."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
+    Positions are 1-based, null/short texts emit no rows, ``_h`` is a
+    signed 64-bit long."""
     src = df.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     )
-    schema = StructType(
-        [
-            StructField("_id", src.schema["_id"].dataType, True),
-            StructField("_p", LongType(), False),
-            StructField("_h", LongType(), False),
-        ]
-    )
-    return src.mapInArrow(_rolling_hash_batches(min_len), schema)
-
-
-def _slice_gram_batches(min_len: int):
-    """mapInArrow body: (_id, _text, _ps) batches → (_id, _p, _g) rows —
-    one Python string slice per listed position. Candidates are the
-    duplicated tail (a few % of positions), so the per-row loop touches
-    little data; string slicing is code-point indexed in Python exactly
-    like ``substring``'s character positions."""
-    L = min_len
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            pss = batch.column(2).to_pylist()
-            idx: list[int] = []
-            ps_out: list[int] = []
-            grams: list[str] = []
-            for i, (t, ps) in enumerate(zip(texts, pss)):
-                if t is None or not ps:
-                    continue
-                for p in ps:
-                    idx.append(i)
-                    ps_out.append(p)
-                    grams.append(t[p - 1 : p - 1 + L])
-            if not grams:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(idx)),
-                    pa.array(ps_out, pa.int64()),
-                    pa.array(grams, pa.string()),
-                ],
-                names=["_id", "_p", "_g"],
-            )
-
-    return run
-
-
-def _gram_rows_schema(src: DataFrame):
-    """Output schema for the literal-gram mapInArrow bodies: the input
-    frame's ``_id`` type plus (position, gram)."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("_id", src.schema["_id"].dataType, True),
-            StructField("_p", LongType(), False),
-            StructField("_g", StringType(), False),
-        ]
-    )
+    fold = functools.partial(_rolling_hash_rows, min_len)
+    return arrow_fold(src, "_id", _HASH_FIELDS, fold)
 
 
 def _candidate_literal_grams(
@@ -956,11 +830,17 @@ def _candidate_literal_grams(
     (collect_list of positions — candidates are the duplicated tail,
     so the build side is small and broadcastable), joining back to the
     text on the id key, and slicing each listed position out of the
-    document string in one vectorized ``mapInArrow`` pass (guide §4.2
-    again — measured 6.9 s → 0.6 s warm at sf0.1 vs the interpreted
-    HOF slice-and-join form, which paid ~50 interpreted node-evals per
-    candidate). Document text crosses to Python once per doc, never
-    per candidate row."""
+    document string in Python (code-point indexed exactly like
+    ``substring``'s character positions; measured 6.9 s → 0.6 s warm
+    at sf0.1 vs the interpreted HOF slice-and-join form). Document text
+    crosses to Python once per doc, never per candidate row."""
+    L = min_len
+
+    def slices(t, ps):
+        if t is None or not ps:
+            return None
+        return ps, [t[p - 1 : p - 1 + L] for p in ps]
+
     by_doc = cand.groupBy("_id").agg(
         F.sort_array(F.collect_list("_p")).alias("_ps")
     )
@@ -968,9 +848,7 @@ def _candidate_literal_grams(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     )
     src = by_doc.join(txt, "_id").select("_id", "_text", "_ps")
-    return src.mapInArrow(
-        _slice_gram_batches(min_len), _gram_rows_schema(src)
-    )
+    return arrow_fold(src, "_id", _GRAM_FIELDS, per_doc(slices, 2))
 
 
 def cut_spans(
@@ -1108,57 +986,25 @@ def _span_islands(marked: DataFrame, min_len: int) -> DataFrame:
     )
 
 
-def _all_gram_batches(min_len: int):
-    """mapInArrow body: (_id, _text) batches → (_id, _p, _g) rows with
-    EVERY position's ``min_len``-char gram — Python string slices, one
-    per window (used on the small eval side only)."""
-    L = min_len
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            idx: list[int] = []
-            ps: list[int] = []
-            grams: list[str] = []
-            for i, t in enumerate(texts):
-                if t is None:
-                    continue
-                npos = len(t) - L + 1
-                for p0 in range(npos):
-                    idx.append(i)
-                    ps.append(p0 + 1)
-                    grams.append(t[p0 : p0 + L])
-            if not grams:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(idx)),
-                    pa.array(ps, pa.int64()),
-                    pa.array(grams, pa.string()),
-                ],
-                names=["_id", "_p", "_g"],
-            )
-
-    return run
-
-
 def _literal_gram_positions(
     df: DataFrame, id_col: str, text_col: str, min_len: int
 ) -> DataFrame:
     """(_id, _p, _g): every position's literal ``min_len``-char gram,
-    sliced out of the document string in one vectorized ``mapInArrow``
-    pass (same §4.2 shape as the hashed scan; the interpreted-HOF
-    array_join(slice(...)) form paid ~L interpreted node-evals per
-    position)."""
+    one Python string slice per window (used on the small eval side
+    only; the interpreted-HOF array_join(slice(...)) form paid ~L
+    interpreted node-evals per position)."""
+    L = min_len
+
+    def grams(t):
+        if t is None:
+            return None
+        npos = len(t) - L + 1
+        return range(1, npos + 1), [t[p0 : p0 + L] for p0 in range(npos)]
+
     src = df.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     )
-    return src.mapInArrow(
-        _all_gram_batches(min_len), _gram_rows_schema(src)
-    )
+    return arrow_fold(src, "_id", _GRAM_FIELDS, per_doc(grams, 2))
 
 
 def contamination_spans(

@@ -4,18 +4,31 @@ Mostly column expressions (JVM-side, codegen'd): tokenize, token/char
 statistics, word and character shingles, stopword-based language ID,
 quality scoring, and normalization fingerprints. Each is a building
 block used by ``plans/text.py`` and ``plans/dedup.py`` with DuckDB
-oracles where SQL can express the same computation. The winnowing
-fingerprint family additionally has vectorized ``mapInArrow``
-DataFrame-level forms (:func:`winnow_fp_pairs` /
-:func:`winnow_fp_summary`) computing the IDENTICAL integers — the
-polynomial is plain int64 arithmetic, so numpy reproduces it
-bit-for-bit (r14 optimization; guide §4.2).
+oracles where SQL can express the same computation. The ``*_rows``
+and ``winnow_fp_*`` forms fold per document in Python through
+:mod:`.arrow_fold` and compute the IDENTICAL values their column
+forms do (the winnowing polynomial is plain int64 arithmetic, so
+numpy reproduces it bit-for-bit).
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+from collections import Counter
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .arrow_fold import arrow_fold, per_doc
 
 # Stopword lists for the heuristic language-ID scorer. Deliberately tiny:
 # the point is the operator shape (fully vectorized scoring + argmax with
@@ -28,12 +41,19 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-# Per-task md5 memo bound (ADVICE r14): ~1M entries ≈ low hundreds of
-# MB worst case (key strings dominate) — big enough that the Zipf head
-# of any real vocabulary stays resident, small enough that one
-# long-lived task over adversarial input cannot grow without ceiling.
-# Shared by dsir_bucket_counts_rows here and dedup._simhash_md5_rows.
+# md5 memo bound per Python worker: ~1M entries ≈ low hundreds of MB
+# worst case (key strings dominate) — big enough that the Zipf head of
+# any real vocabulary stays resident, small enough that one long-lived
+# worker over adversarial input cannot grow without ceiling.
 _MEMO_CAP = 1 << 20
+
+
+@functools.lru_cache(maxsize=_MEMO_CAP)
+def md5hash60_py(s: str) -> int:
+    """``dedup.md5hash60`` in Python (first 15 md5 hex chars of the
+    utf-8 bytes as an int), memoized with LRU eviction so the Zipf head
+    stays resident. Module-level so folds ship it by reference."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def tokens(col: Column) -> Column:
@@ -91,260 +111,110 @@ def char_ngram_stats_rows(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """(``id_col``, n_ngrams, n_distinct_ngrams) per document — the
-    summary :func:`char_ngrams` + size/array_distinct computes, in one
-    vectorized numpy pass per Arrow batch (r14, guide §4.2): each
-    n-gram is encoded as a single uint64 from its code points (code
-    points < 2^21, so 3 fit exactly), and distinct-counting is
-    ``np.unique`` — a bijection of the distinct-gram-string count, so
+    summary :func:`char_ngrams` + size/array_distinct computes, in
+    numpy: each n-gram is encoded as a single uint64 from its code
+    points (code points < 2^21, so 3 fit exactly), and distinct-counting
+    is ``np.unique`` — a bijection of the distinct-gram-string count, so
     the integers are identical to the column form's. Null or
-    shorter-than-n texts yield (0, 0) exactly like
-    ``size(array())``."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    shorter-than-n texts yield (0, 0) exactly like ``size(array())``."""
     assert n == 3, "encoding packs exactly 3 code points"
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
+    shift = np.uint64(21)
+
+    def stats(t):
+        if t is None or len(t) < 3:
+            return [0], [0]
+        cps = np.frombuffer(t.encode("utf-32-le"), dtype="<u4").astype(
+            np.uint64
+        )
+        tri = (cps[:-2] << (shift + shift)) | (cps[1:-1] << shift) | cps[2:]
+        return [len(tri)], [len(np.unique(tri))]
+
+    return arrow_fold(
+        df.select(id_col, text_col),
+        id_col,
+        [("n_ngrams", IntegerType()), ("n_distinct_ngrams", IntegerType())],
+        per_doc(stats, 2),
     )
-    schema = StructType(
-        [
-            StructField(id_col, src.schema["_id"].dataType, True),
-            StructField("n_ngrams", IntegerType(), False),
-            StructField("n_distinct_ngrams", IntegerType(), False),
-        ]
-    )
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            total, distinct = [], []
-            shift = np.uint64(21)
-            for t in texts:
-                if t is None or len(t) < 3:
-                    total.append(0)
-                    distinct.append(0)
-                    continue
-                cps = np.frombuffer(
-                    t.encode("utf-32-le"), dtype="<u4"
-                ).astype(np.uint64)
-                tri = (
-                    (cps[:-2] << (shift + shift))
-                    | (cps[1:-1] << shift)
-                    | cps[2:]
-                )
-                total.append(len(tri))
-                distinct.append(len(np.unique(tri)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(total, pa.int32()),
-                    pa.array(distinct, pa.int32()),
-                ],
-                names=[id_col, "n_ngrams", "n_distinct_ngrams"],
-            )
-
-    return src.mapInArrow(run, schema)
 
 
 def gopher_measures_rows(toks: DataFrame) -> DataFrame:
     """The Gopher measurement frame — (doc_id, nc, n_tokens,
     n_distinct_tokens, top2 struct, n_5grams, n_distinct_5grams) from a
     pre-tokenized (doc_id, nc, tk) frame — computed per doc in Python
-    over the JVM-TOKENIZED arrays (r14, guide §4.2): the token arrays
-    cross the Arrow boundary unchanged, so tokenization semantics stay
-    exactly ``tokens()``'s, and the array folds (distinct counts,
-    2-gram run-length mode with the first-maximal/lexicographically-
-    smallest tiebreak, 5-gram distinct count) are plain Python over
-    those tokens — value-identical to the column-fold forms because
-    tokens cannot contain whitespace, making the ``' '``-join gram
-    encoding injective."""
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    over the JVM-TOKENIZED arrays: tokenization semantics stay exactly
+    ``tokens()``'s, and the array folds (distinct counts, 2-gram
+    run-length mode with the first-maximal/lexicographically-smallest
+    tiebreak, 5-gram distinct count) are value-identical to the
+    column-fold forms because tokens cannot contain whitespace, making
+    the ``' '``-join gram encoding injective."""
 
-    id_type = toks.schema["doc_id"].dataType
-    nc_type = toks.schema["nc"].dataType
-    schema = StructType(
+    def measures(nc, tk):
+        if tk is None:
+            # the column form's null-tk row: size(null) is NULL for the
+            # token counts, but word_shingles' otherwise-branch is an
+            # EMPTY array, so top2 is ('', 0) and the 5-gram counts are 0
+            return [nc], [None], [None], [("", 0)], [0], [0]
+        n = len(tk)
+        top2 = ("", 0)
+        if n >= 2:
+            cnt = Counter(zip(tk, tk[1:]))
+            # first maximal run of the SORTED gram array == max count,
+            # lexicographically smallest JOINED gram STRING — the tie
+            # must be keyed on the ' '-joined gram, not the token tuple:
+            # tokens may contain code points below U+0020 (the \s+
+            # tokenizer only strips whitespace), and for ('a\x01','b')
+            # vs ('a','c') tuple order and joined-string order disagree
+            g, c = min(
+                cnt.items(),
+                key=lambda kv: (-kv[1], kv[0][0] + " " + kv[0][1]),
+            )
+            top2 = (g[0] + " " + g[1], c)
+        k5 = max(n - 4, 0)
+        nd5 = len({tuple(tk[i : i + 5]) for i in range(k5)})
+        return [nc], [n], [len(set(tk))], [top2], [k5], [nd5]
+
+    top2_type = StructType(
         [
-            StructField("doc_id", id_type, True),
-            StructField("nc", nc_type, True),
-            StructField("n_tokens", IntegerType(), True),
-            StructField("n_distinct_tokens", IntegerType(), True),
-            StructField(
-                "top2",
-                StructType(
-                    [
-                        StructField("bestg", StringType(), True),
-                        StructField("best", IntegerType(), True),
-                    ]
-                ),
-                True,
-            ),
-            StructField("n_5grams", IntegerType(), True),
-            StructField("n_distinct_5grams", IntegerType(), True),
+            StructField("bestg", StringType(), True),
+            StructField("best", IntegerType(), True),
         ]
     )
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            ncs = batch.column(1)
-            tks = batch.column(2).to_pylist()
-            n_tok, n_dtok, bestg, best, n5, nd5 = [], [], [], [], [], []
-            for tk in tks:
-                if tk is None:
-                    # the column form's null-tk row: size(null) is
-                    # NULL for the token counts, but word_shingles'
-                    # otherwise-branch is an EMPTY array, so top2 is
-                    # ('', 0) and the 5-gram counts are 0 (ADVICE r14
-                    # — previously this branch emitted all-NULL)
-                    n_tok.append(None)
-                    n_dtok.append(None)
-                    bestg.append("")
-                    best.append(0)
-                    n5.append(0)
-                    nd5.append(0)
-                    continue
-                n = len(tk)
-                n_tok.append(n)
-                n_dtok.append(len(set(tk)))
-                if n >= 2:
-                    bi = list(zip(tk, tk[1:]))
-                    from collections import Counter
-
-                    cnt = Counter(bi)
-                    # first maximal run of the SORTED gram array ==
-                    # max count, lexicographically smallest JOINED
-                    # gram STRING — the tie must be keyed on the
-                    # ' '-joined gram, not the token tuple: tokens may
-                    # contain code points below U+0020 (the \s+
-                    # tokenizer only strips whitespace), and for
-                    # ('a\x01','b') vs ('a','c') tuple order and
-                    # joined-string order disagree (ADVICE r14)
-                    g, c = min(
-                        cnt.items(),
-                        key=lambda kv: (-kv[1], kv[0][0] + " " + kv[0][1]),
-                    )
-                    bestg.append(g[0] + " " + g[1])
-                    best.append(c)
-                else:
-                    bestg.append("")
-                    best.append(0)
-                k5 = max(n - 4, 0)
-                n5.append(k5)
-                nd5.append(
-                    len({tuple(tk[i : i + 5]) for i in range(k5)})
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    ncs,
-                    pa.array(n_tok, pa.int32()),
-                    pa.array(n_dtok, pa.int32()),
-                    pa.StructArray.from_arrays(
-                        [
-                            pa.array(bestg, pa.string()),
-                            pa.array(best, pa.int32()),
-                        ],
-                        names=["bestg", "best"],
-                    ),
-                    pa.array(n5, pa.int32()),
-                    pa.array(nd5, pa.int32()),
-                ],
-                names=[
-                    "doc_id",
-                    "nc",
-                    "n_tokens",
-                    "n_distinct_tokens",
-                    "top2",
-                    "n_5grams",
-                    "n_distinct_5grams",
-                ],
-            )
-
-    return toks.select("doc_id", "nc", "tk").mapInArrow(run, schema)
+    return arrow_fold(
+        toks.select("doc_id", "nc", "tk"),
+        "doc_id",
+        [
+            ("nc", toks.schema["nc"].dataType),
+            ("n_tokens", IntegerType()),
+            ("n_distinct_tokens", IntegerType()),
+            ("top2", top2_type),
+            ("n_5grams", IntegerType()),
+            ("n_distinct_5grams", IntegerType()),
+        ],
+        per_doc(measures, 6),
+    )
 
 
 def dsir_bucket_counts_rows(toks: DataFrame, buckets: int) -> DataFrame:
     """(doc_id, b, tf) — per-doc hashed-bigram bucket counts from a
     pre-tokenized (doc_id, nc, tk) frame: md5hash60(gram) % buckets,
-    counted per doc in Python (r14, guide §4.2). hashlib.md5 over the
-    same utf-8 bytes reproduces ``md5hash60`` exactly (first 15 hex
-    chars as int); per-doc Counter folding replaces the
-    explode + groupBy(doc, b) shuffle with map-side-complete rows
-    (≤ ``buckets`` per doc by construction)."""
-    import hashlib
+    counted per doc in Python with :func:`md5hash60_py`. Per-doc Counter
+    folding replaces the explode + groupBy(doc, b) shuffle with
+    map-side-complete rows (≤ ``buckets`` per doc by construction)."""
 
-    from pyspark.sql.types import LongType, StructField, StructType
+    def counts(tk):
+        if not tk or len(tk) < 2:
+            return None
+        cnt = Counter(
+            md5hash60_py(a + " " + b) % buckets for a, b in zip(tk, tk[1:])
+        )
+        return tuple(zip(*sorted(cnt.items())))
 
-    id_type = toks.schema["doc_id"].dataType
-    schema = StructType(
-        [
-            StructField("doc_id", id_type, True),
-            StructField("b", LongType(), False),
-            StructField("tf", LongType(), False),
-        ]
+    return arrow_fold(
+        toks.select("doc_id", "tk"),
+        "doc_id",
+        [("b", LongType()), ("tf", LongType())],
+        per_doc(counts, 2),
     )
-
-    def run(batches):
-        from collections import Counter
-
-        import pyarrow as pa
-
-        # BOUNDED per-task memo (ADVICE r14): distinct bigrams grow
-        # roughly linearly with partition text volume — reset on
-        # overflow rather than grow without ceiling (md5 of a short
-        # string is cheap; the Zipf head re-warms within one batch)
-        memo: dict[str, int] = {}
-
-        def bucket(g: str) -> int:
-            b = memo.get(g)
-            if b is None:
-                if len(memo) >= _MEMO_CAP:
-                    memo.clear()
-                b = (
-                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                    % buckets
-                )
-                memo[g] = b
-            return b
-
-        for batch in batches:
-            ids = batch.column(0)
-            tks = batch.column(2).to_pylist()
-            idx: list[int] = []
-            bs: list[int] = []
-            tfs: list[int] = []
-            for i, tk in enumerate(tks):
-                if not tk or len(tk) < 2:
-                    continue
-                cnt = Counter(
-                    bucket(a + " " + b) for a, b in zip(tk, tk[1:])
-                )
-                for b, c in sorted(cnt.items()):
-                    idx.append(i)
-                    bs.append(b)
-                    tfs.append(c)
-            if not idx:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(idx)),
-                    pa.array(bs, pa.int64()),
-                    pa.array(tfs, pa.int64()),
-                ],
-                names=["doc_id", "b", "tf"],
-            )
-
-    return toks.select("doc_id", "nc", "tk").mapInArrow(run, schema)
 
 
 def term_counts_rows(
@@ -354,57 +224,22 @@ def term_counts_rows(
     its occurrence count, i.e. exactly
     ``explode(tokens(...)).groupBy(id, term).count()`` with the
     explode + (doc, term) Exchange replaced by a per-doc Counter fold
-    over JVM-tokenized arrays (r14, guide §4.2 / §2.3 "aggregate
-    before you shuffle" taken to its limit: the rows leave Python
-    already aggregated). Tokenization stays ``tokens()`` in the JVM;
-    docs with zero tokens emit no rows, like the explode form."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    over JVM-tokenized arrays: the rows leave Python already
+    aggregated. Docs with zero tokens emit no rows, like the explode
+    form."""
+
+    def counts(tk):
+        if not tk:
+            return None
+        return tuple(zip(*sorted(Counter(tk).items())))
 
     tok = tokens(F.lower(F.col(text_col)) if lower else F.col(text_col))
-    src = df.select(F.col(id_col).alias("_id"), tok.alias("_tk"))
-    schema = StructType(
-        [
-            StructField(id_col, src.schema["_id"].dataType, True),
-            StructField("term", StringType(), False),
-            StructField("tf", LongType(), False),
-        ]
+    return arrow_fold(
+        df.select(F.col(id_col), tok.alias("_tk")),
+        id_col,
+        [("term", StringType()), ("tf", LongType())],
+        per_doc(counts, 2),
     )
-
-    def run(batches):
-        from collections import Counter
-
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            tks = batch.column(1).to_pylist()
-            idx: list[int] = []
-            terms: list[str] = []
-            tfs: list[int] = []
-            for i, tk in enumerate(tks):
-                if not tk:
-                    continue
-                for t, c in sorted(Counter(tk).items()):
-                    idx.append(i)
-                    terms.append(t)
-                    tfs.append(c)
-            if not idx:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(idx)),
-                    pa.array(terms, pa.string()),
-                    pa.array(tfs, pa.int64()),
-                ],
-                names=[id_col, "term", "tf"],
-            )
-
-    return src.mapInArrow(run, schema)
 
 
 def doc_term_stats_rows(
@@ -417,58 +252,25 @@ def doc_term_stats_rows(
     """(``id_col``, dl, _tf0.._tfk) — one row per document with ≥ 1
     token: document length plus the term frequency of each fixed query
     term, i.e. exactly ``explode(tokens(...)).groupBy(id).agg(count,
-    sum(term == t_i)...)`` with the explode + per-doc aggregation
-    folded before the Python boundary (r15, guide §4.2 — the
-    ``term_counts_rows`` pattern specialized to a literal vocabulary,
-    motivated by the bm25 docstats stage). Tokenization stays
-    ``tokens()`` in the JVM; one ``Counter`` per document gives the
-    exact integer ``sum((term == t).cast long)`` for every term in
-    O(dl + |terms|); docs with zero tokens emit no row, like the
-    explode+groupBy form."""
-    from pyspark.sql.types import LongType, StructField, StructType
+    sum(term == t_i)...)`` folded before the Python boundary. One
+    ``Counter`` per document gives the exact integer
+    ``sum((term == t).cast long)`` for every term in O(dl + |terms|);
+    docs with zero tokens emit no row, like the explode+groupBy form."""
+
+    def stats(tk):
+        if not tk:
+            return None
+        counts = Counter(tk)
+        return ([len(tk)], *([counts[t]] for t in terms))
 
     tok = tokens(F.lower(F.col(text_col)) if lower else F.col(text_col))
-    src = df.select(F.col(id_col).alias("_id"), tok.alias("_tk"))
-    schema = StructType(
-        [
-            StructField(id_col, src.schema["_id"].dataType, True),
-            StructField("dl", LongType(), False),
-        ]
-        + [
-            StructField(f"_tf{i}", LongType(), False)
-            for i in range(len(terms))
-        ]
+    return arrow_fold(
+        df.select(F.col(id_col), tok.alias("_tk")),
+        id_col,
+        [("dl", LongType())]
+        + [(f"_tf{i}", LongType()) for i in range(len(terms))],
+        per_doc(stats, 1 + len(terms)),
     )
-
-    def run(batches):
-        from collections import Counter
-
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            tks = batch.column(1).to_pylist()
-            idx: list[int] = []
-            dls: list[int] = []
-            tfs: list[list[int]] = [[] for _ in terms]
-            for i, tk in enumerate(tks):
-                if not tk:
-                    continue
-                idx.append(i)
-                dls.append(len(tk))
-                counts = Counter(tk)
-                for j, t in enumerate(terms):
-                    tfs[j].append(counts[t])
-            if not idx:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(idx)), pa.array(dls, pa.int64())]
-                + [pa.array(c, pa.int64()) for c in tfs],
-                names=[id_col, "dl"]
-                + [f"_tf{i}" for i in range(len(terms))],
-            )
-
-    return src.mapInArrow(run, schema)
 
 
 def stopword_hits(col: Column, words: tuple[str, ...]) -> Column:
@@ -685,8 +487,6 @@ def _winnow_fps_np(text: str | None, k: int, window: int, B, strip_rx):
     HOF evaluation. Every edge case of the column form is replicated:
     null/short text → empty; 0 < n_hashes < window → one window over
     whatever exists (the ``slice`` semantics of the JVM form)."""
-    import numpy as np
-
     if text is None:
         return np.empty(0, np.int64)
     t = strip_rx.sub("", text)
@@ -726,39 +526,19 @@ def winnow_fp_pairs(
     vectorized (identical integers, identical row multiset: per-doc
     first-occurrence-deduped fingerprints, docs with none emit no
     rows)."""
-    from pyspark.sql.types import LongType, StructField, StructType
+    B, strip_rx = _winnow_setup(k, window)
 
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
+    def fold(texts):
+        fps = [_winnow_fps_np(t, k, window, B, strip_rx) for t in texts]
+        counts = np.fromiter((len(f) for f in fps), np.int64, len(fps))
+        return np.repeat(np.arange(len(fps)), counts), [np.concatenate(fps)]
+
+    return arrow_fold(
+        df.select(id_col, text_col),
+        id_col,
+        [("fp", LongType())],
+        fold,
     )
-    schema = StructType(
-        [
-            StructField(id_col, src.schema["_id"].dataType, True),
-            StructField("fp", LongType(), False),
-        ]
-    )
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        B, strip_rx = _winnow_setup(k, window)
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            fps = [_winnow_fps_np(t, k, window, B, strip_rx) for t in texts]
-            counts = np.fromiter((len(f) for f in fps), np.int64, len(fps))
-            if int(counts.sum()) == 0:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(np.repeat(np.arange(len(fps)), counts))),
-                    pa.array(np.concatenate(fps)),
-                ],
-                names=[id_col, "fp"],
-            )
-
-    return src.mapInArrow(run, schema)
 
 
 def winnow_fp_summary(
@@ -768,49 +548,26 @@ def winnow_fp_summary(
     text_winnowing_fingerprints emits, same values as summarizing
     :func:`winnow_fps` (n_fp = count of deduped fingerprints, fp_min
     their min or NULL when none, fp_check their sum mod 1000000007)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    B, strip_rx = _winnow_setup(k, window)
 
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-    )
-    schema = StructType(
+    def summary(t):
+        f = _winnow_fps_np(t, k, window, B, strip_rx)
+        return (
+            [len(f)],
+            [int(f.min()) if len(f) else None],
+            [int(f.sum()) % 1000000007],
+        )
+
+    return arrow_fold(
+        df.select(id_col, text_col),
+        id_col,
         [
-            StructField(id_col, src.schema["_id"].dataType, True),
-            StructField("n_fp", IntegerType(), False),
-            StructField("fp_min", LongType(), True),
-            StructField("fp_check", LongType(), False),
-        ]
+            ("n_fp", IntegerType()),
+            ("fp_min", LongType()),
+            ("fp_check", LongType()),
+        ],
+        per_doc(summary, 3),
     )
-
-    def run(batches):
-        import pyarrow as pa
-
-        B, strip_rx = _winnow_setup(k, window)
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            fps = [_winnow_fps_np(t, k, window, B, strip_rx) for t in texts]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array([len(f) for f in fps], pa.int32()),
-                    pa.array(
-                        [int(f.min()) if len(f) else None for f in fps],
-                        pa.int64(),
-                    ),
-                    pa.array(
-                        [int(f.sum()) % 1000000007 for f in fps], pa.int64()
-                    ),
-                ],
-                names=[id_col, "n_fp", "fp_min", "fp_check"],
-            )
-
-    return src.mapInArrow(run, schema)
 
 
 def bpe_initial_words(docs, text_col: str = "text"):

@@ -293,9 +293,9 @@ def _winnow_doc_fp(d: DataFrame) -> DataFrame:
     artifact shared by CC and the keep-best query (cache substitution
     matches the identical plan; compact (doc_id, fp) pairs, one block
     set per dataset under LRU)."""
-    # r14: the fingerprint computation is the vectorized mapInArrow
-    # form — identical integers (operators.text.winnow_fp_pairs), one
-    # numpy pass instead of interpreted per-position HOF evaluation.
+    # The fingerprints come from the vectorized Arrow fold — identical
+    # integers (operators.text.winnow_fp_pairs), numpy instead of
+    # interpreted per-position HOF evaluation.
     return winnow_fp_pairs(d, "doc_id", "text").distinct().cache()
 
 

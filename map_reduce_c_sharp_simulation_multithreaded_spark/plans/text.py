@@ -739,12 +739,11 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
-    # r14 optimization: the polynomial is plain int64 arithmetic, so
-    # the vectorized mapInArrow form computes the IDENTICAL integers
-    # (operators.text.winnow_fp_summary) — one numpy pass per batch
-    # instead of interpreted per-position HOF evaluation (guide §4.2);
-    # measured 1.73 s → see OPTIMIZATION_r14.md. The oracle CTE is
-    # unchanged — both engines still replay the same arithmetic.
+    # The polynomial is plain int64 arithmetic, so the vectorized Arrow
+    # fold computes the IDENTICAL integers (operators.text.
+    # winnow_fp_summary) — numpy per document instead of interpreted
+    # per-position HOF evaluation. The oracle CTE replays the same
+    # arithmetic.
     return winnow_fp_summary(d, "doc_id", "text")
 
 

@@ -18,16 +18,22 @@ len >= min_len, nothing for null/short texts).
 
 from __future__ import annotations
 
+import functools
+
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from map_reduce_c_sharp_simulation_multithreaded_spark.operators.arrow_fold import (
+    fold_batches,
+)
 from map_reduce_c_sharp_simulation_multithreaded_spark.operators.dedup import (
     _GRAM_B,
     _GRAM_BINV,
+    _HASH_FIELDS,
     _hashed_gram_positions,
     _prefix_window_hashes,
-    _rolling_hash_batches,
+    _rolling_hash_rows,
     gram_hash,
 )
 
@@ -96,7 +102,8 @@ def test_rolling_hash_batches_rows_and_nulls():
         names=["_id", "_text"],
     )
     rows = []
-    for out in _rolling_hash_batches(L)([batch]):
+    fold = functools.partial(_rolling_hash_rows, L)
+    for out in fold_batches([batch], "_id", _HASH_FIELDS, fold):
         for i in range(out.num_rows):
             rows.append(
                 (

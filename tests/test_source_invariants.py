@@ -54,15 +54,11 @@ ALLOWED = {
     # a synthetic range) — measurement harness only, never on a query
     # path
     "session.py": (2, "host_speed_probe/_single one-scalar collects"),
-    # r14 vectorized mapInArrow bodies: pyarrow.Array.take — an
-    # EXECUTOR-side columnar gather kernel inside the batch loop, not
-    # a DataFrame.take; the AST scan cannot see the receiver type, so
-    # these are documented false positives of the method-name match.
-    # dedup.py: _rolling_hash_batches, _slice_gram_batches,
-    # _all_gram_batches, _simhash_md5_rows; text.py: winnow_fp_pairs,
-    # dsir_bucket_counts_rows, term_counts_rows, doc_term_stats_rows.
-    os.path.join("operators", "dedup.py"): (4, "pyarrow Array.take in workers"),
-    os.path.join("operators", "text.py"): (4, "pyarrow Array.take in workers"),
+    # executor-side pyarrow.Array.take key gather: a method-name false positive
+    os.path.join("operators", "arrow_fold.py"): (
+        1,
+        "pyarrow Array.take in the fold harness",
+    ),
 }
 
 
