@@ -14,6 +14,9 @@ Reproduces the reference's CSV semantics (SURVEY.md §1.4, FIXTURES.md
   separators (``D/Program.cs:483``) → ``format_string('%.2f')``;
 * duplicate Donor ID keeps the LAST occurrence (``D/Program.cs:296``)
   → keep-last window over file position;
+* per-worker partial aggregation (``DonationAggregator``,
+  ``D/Program.cs:273``) → per-donor partial sums computed before the
+  join, so the probe is one row per Donor ID;
 * missing Donor ID on the probe side THROWS (``D/Program.cs:310``)
   → strict mode via ``strict_join_agg``: one evaluation computes the
   per-state sums and the missing-key check together.
@@ -24,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.joins import strict_join_agg
+from ..operators.joins import dedup_dim_last_wins, strict_join_agg
 from ..schemas import DONATIONS_CSV, DONORS_CSV
 
 
@@ -104,13 +107,11 @@ def dedup_donors_last_wins(donors: DataFrame) -> DataFrame:
     FILE order (``D/Program.cs:296``); a single-file CSV read preserves
     that order per partition, surfaced via monotonically increasing ids.
     """
-    w = Window.partitionBy("Donor ID").orderBy(F.col("_pos").desc())
-    return (
-        donors.withColumn("_pos", F.monotonically_increasing_id())
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_pos", "_rn")
-    )
+    return dedup_dim_last_wins(
+        donors.withColumn("_pos", F.monotonically_increasing_id()),
+        "Donor ID",
+        [F.col("_pos")],
+    ).drop("_pos")
 
 
 def donations_by_state(
@@ -119,15 +120,22 @@ def donations_by_state(
     """The reference's one query (``D/Program.cs:228-248``):
 
     donations ⋈ donors on Donor ID → GROUP BY Donor State →
-    SUM(coalesce(amount, 0.0)). ``strict=True`` reproduces the
-    missing-key throw: it evaluates the join and aggregate here, once,
-    and raises before returning; the result is read back from that
-    evaluation. ``strict=False`` is the lazy inner-join-drop mode.
+    SUM(coalesce(amount, 0.0)). The donations are first summed per
+    Donor ID, below the join (eager aggregation): the reference's
+    per-worker partial aggregation (``DonationAggregator``,
+    ``D/Program.cs:273``) moved ahead of the probe, so the join sees one
+    row per donor and the partial sums are computed map-side in the
+    scan stage. Both sides then arrive hash-partitioned on Donor ID.
+    ``strict=True`` reproduces the missing-key throw: it evaluates the
+    join and aggregate here, once, and raises before returning; the
+    result is read back from that evaluation. An unknown Donor ID is
+    still an unmatched probe row, so the smallest missing key is
+    reported.
+    ``strict=False`` is the lazy inner-join-drop mode.
     """
     dim = dedup_donors_last_wins(donors).select("Donor ID", "Donor State")
-    fact = donations.select(
-        "Donor ID",
-        F.coalesce(F.col("Donation Amount"), F.lit(0.0)).alias("_amount"),
+    fact = donations.groupBy("Donor ID").agg(
+        F.sum(F.coalesce(F.col("Donation Amount"), F.lit(0.0))).alias("_amount")
     )
     by_state = [F.col("Donor State").alias("State")]
     total = [F.sum("_amount").alias("Total Donation Amount")]

@@ -7,8 +7,12 @@ fields preserved, blank lines, duplicate donor keys, empty amounts.
 from __future__ import annotations
 
 import glob
+import importlib.util
+import os
 
+import numpy as np
 import pytest
+from py4j.protocol import Py4JError
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.sources.csv_reference import (
     donations_by_state,
@@ -278,3 +282,133 @@ def test_ascii_encoding_bug_compat_mode(spark, tmp_path):
         for r in read_donors(spark, path).collect()
     }
     assert utf8_rows == {("d1", "Québec"), ("d2", "Oregon")}
+
+
+# --- per-donor partial sums below the join --------------------------------
+
+HEADER_DONORS = "Donor ID,Donor City,Donor State,Donor Is Teacher,Donor Zip\n"
+HEADER_DONATIONS = (
+    "Project ID,Donation ID,Donor ID,Donation Included Optional Donation,"
+    "Donation Amount,Donor Cart Sequence\n"
+)
+
+
+def _write_pair(tmp_path, donors: str, donations: str):
+    donors_path = tmp_path / "donors.csv"
+    donations_path = tmp_path / "donations.csv"
+    donors_path.write_text(HEADER_DONORS + donors)
+    donations_path.write_text(HEADER_DONATIONS + donations)
+    return str(donors_path), str(donations_path)
+
+
+def test_per_donor_sum_lands_in_last_state(spark, tmp_path):
+    """A donor's donations are summed per Donor ID before the join; the
+    whole sum (an empty amount counting 0.0) goes to the state of the
+    donor's LAST occurrence, in both modes."""
+    donors_path, donations_path = _write_pair(
+        tmp_path,
+        "dA,Springfield,CA,No,90001\n"
+        "dB,Portland,NY,Yes,10001\n"
+        "dA,Oakland,TX,No,73301\n",
+        "p1,x1,dA,Yes,10.25,1\n"
+        "p2,x2,dB,No,1.00,1\n"
+        "p3,x3,dA,Yes,,2\n"
+        "p4,x4,dA,No,5.50,3\n"
+        "p5,x5,dA,No,0.25,4\n",
+    )
+    donors = read_donors(spark, donors_path)
+    donations = read_donations(spark, donations_path)
+    strict = _by_state(donations_by_state(donors, donations, strict=True))
+    assert strict == {"TX": 16.0, "NY": 1.0}
+    assert strict == _by_state(donations_by_state(donors, donations, strict=False))
+
+
+def test_strict_names_missing_donor_with_several_donations(spark, tmp_path):
+    """An unknown Donor ID with several donations is one unmatched
+    per-donor row: strict mode still raises and names that ID."""
+    donors_path, donations_path = _write_pair(
+        tmp_path,
+        "d1,Springfield,CA,No,90001\n",
+        "p1,x1,d1,Yes,1.00,1\n"
+        "p2,x2,dGONE,No,2.00,1\n"
+        "p3,x3,dGONE,No,3.00,2\n"
+        "p4,x4,dGONE,No,,3\n",
+    )
+    with pytest.raises(ValueError, match="strict join") as err:
+        donations_by_state(
+            read_donors(spark, donors_path),
+            read_donations(spark, donations_path),
+            strict=True,
+        )
+    assert "dGONE" in str(err.value)
+
+
+def _perfbench_gen():
+    """The benchmark's input generator, loaded read-only from its file
+    (``perfbench`` is a script directory, not a package)."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "gen.py",
+    )
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_generated_fixture_matches_generator_cents(spark, tmp_path, strict):
+    """The benchmark generator's inputs (duplicate donors, Zipf-skewed
+    donations, empty amounts) at small scale: per-state totals match
+    the generator's own integer cents within one cent."""
+    gen = _perfbench_gen()
+    out = str(tmp_path / "gen")
+    expected = gen.gen_donors(np.random.default_rng(7), out, 2_000, 6_000)
+    got = _by_state(
+        donations_by_state(
+            read_donors(spark, f"{out}/donors.csv"),
+            read_donations(spark, f"{out}/donations.csv"),
+            strict=strict,
+        )
+    )
+    assert set(got) == set(expected)
+    for state, cents in expected.items():
+        assert abs(got[state] * 100 - cents) <= 1, state
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, descending through AQE wrappers
+    and query stages."""
+    yield node
+    ch = node.children()
+    for i in range(ch.size()):
+        yield from _plan_nodes(ch.apply(i))
+    for meth in ("executedPlan", "plan"):
+        try:
+            inner = getattr(node, meth)()
+        except Py4JError:  # not an AQE wrapper or query stage
+            continue
+        yield from _plan_nodes(inner)
+
+
+def test_donations_aggregated_by_donor_below_join(spark, csv_paths):
+    """The executed non-strict plan sums the donations per Donor ID
+    below the join; which join strategy AQE picks is left open."""
+    donors_path, donations_path, _ = csv_paths
+    result = donations_by_state(
+        read_donors(spark, donors_path),
+        read_donations(spark, donations_path),
+        strict=False,
+    )
+    result.collect()
+    joins = [
+        n for n in _plan_nodes(result._jdf.queryExecution().executedPlan())
+        if "Join" in n.nodeName()
+    ]
+    assert joins
+    below = [
+        n.simpleString(25)
+        for j in joins for n in _plan_nodes(j)
+        if "Aggregate" in n.nodeName()
+    ]
+    assert any("keys=[Donor ID#" in s for s in below), below
