@@ -60,65 +60,6 @@ def get_spark(
     return spark
 
 
-def host_speed_probe(spark: SparkSession, passes: int = 3) -> float:
-    """Fixed CPU-bound probe, min across ``passes`` — the host-speed
-    calibration constant recorded in BENCH_r{N}/SWEEP_r{N} artifacts
-    (VERDICT.md r7 next-round #4). SCALE.md's "host-speed epoch"
-    measured IDENTICAL code uniformly 1.4-1.5× slower between host
-    windows, which the 1.5× perf gates cannot distinguish from a slow
-    plan; dividing by the ratio of recorded calibration constants
-    normalizes that out before the bar applies (compare_sweeps in
-    tools/sweep_times.py). The probe is a codegen'd 2B-row sum over
-    all local cores: no data dependence, no shuffle, no Python — pure
-    JVM arithmetic throughput, the same resource the epochs throttled.
-    Sized so compute dominates scheduling: 500M rows measured the same
-    wall as 200M (pure task overhead), while 2B runs ~0.45 s warm at
-    local[32], clearly work-bound — the regime where a 1.45× CPU
-    epoch shows up as ~1.45× probe time.
-    """
-    import time as _time
-
-    best = float("inf")
-    for _ in range(passes):
-        t0 = _time.perf_counter()
-        # mod keeps the running sum < 2e15 — sum(id*id) raw would
-        # overflow long under ANSI (default in Spark 4) at this n
-        spark.range(2_000_000_000).selectExpr(
-            "sum((id * id) % 1000003)"
-        ).collect()
-        best = min(best, _time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def host_speed_probe_single(spark: SparkSession, passes: int = 3) -> float:
-    """SINGLE-THREAD companion to :func:`host_speed_probe` (round 9).
-
-    The parallel probe measures all-core execution throughput — and
-    round 9 found an epoch it is BLIND to: sub-second sf0.1 queries
-    are dominated by single-threaded driver work (Catalyst analysis,
-    whole-stage codegen, JIT compilation), which can slow 1.2–1.6×
-    while the 32-thread probe holds at ~0.45 s (measured this round:
-    headline plans ~1.07× their r7 walls, complex-plan and streaming
-    queries 1.5–2×, first passes spiking 2–3× over steady state —
-    the plan-complexity-proportional signature, not an execution one).
-    This probe pins the same arithmetic to ONE task
-    (``numPartitions=1``), so its round-over-round ratio tracks
-    single-thread speed. Recorded as ``calibration_single_sec`` in
-    sweep/bench artifacts from round 9 on; r7/r8 artifacts predate it,
-    so the first usable cross-round pair is r9→r10.
-    """
-    import time as _time
-
-    best = float("inf")
-    for _ in range(passes):
-        t0 = _time.perf_counter()
-        spark.range(0, 200_000_000, 1, 1).selectExpr(
-            "sum((id * id) % 1000003)"
-        ).collect()
-        best = min(best, _time.perf_counter() - t0)
-    return round(best, 4)
-
-
 def pin_session(spark: SparkSession) -> SparkSession:
     """Pin runtime-settable confs on a session we did not create.
 

@@ -123,3 +123,33 @@ def test_spill_gate_fails_not_skips_without_column():
         })
     with pytest.raises(AssertionError, match="spilled at sf0.1"):
         _assert_zero_spill({"q": {"spill_bytes": 4096}})
+
+
+def test_stage_totals_sum_only_the_job_group(spark):
+    """``tools/shuffle_audit.stage_totals`` reads the in-process status
+    store per job group: a shuffling write under group A shows shuffle
+    bytes, and a later action under group B neither counts A's stages
+    nor changes A's totals."""
+    import sys
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from shuffle_audit import stage_totals
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("audit-test-a", "shuffling write")
+        spark.range(100_000).repartition(3).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        a = stage_totals(spark, "audit-test-a")
+        assert a["shuffle_write_bytes"] > 0
+        assert a["shuffle_read_bytes"] > 0
+
+        sc.setJobGroup("audit-test-b", "narrow write")
+        spark.range(100_000).write.format("noop").mode("overwrite").save()
+        b = stage_totals(spark, "audit-test-b")
+        assert b["shuffle_write_bytes"] == 0
+        assert b["shuffle_read_bytes"] == 0
+        assert stage_totals(spark, "audit-test-a") == a
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -49,11 +49,6 @@ ALLOWED = {
     # connected-components convergence probe: take(1) on the
     # changed-labels join — at most one row per iteration
     os.path.join("plans", "advanced.py"): (1, "take(1) convergence probe"),
-    # host-speed calibration probes (VERDICT r7 #4; r9 adds the
-    # single-thread companion): collect() of ONE scalar each (sum over
-    # a synthetic range) — measurement harness only, never on a query
-    # path
-    "session.py": (2, "host_speed_probe/_single one-scalar collects"),
     # executor-side pyarrow.Array.take key gather: a method-name false positive
     os.path.join("operators", "arrow_fold.py"): (
         1,

@@ -69,8 +69,6 @@ from map_reduce_c_sharp_simulation_multithreaded_spark.plans.similarity import (
 )
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
     get_spark,
-    host_speed_probe,
-    host_speed_probe_single,
 )
 
 N_PROBES = (1, 2, 3, 4, 8, 16)
@@ -110,10 +108,6 @@ def main() -> int:
     loadavg_start = [round(v, 2) for v in os.getloadavg()]
     spark = get_spark("mrcs_ann_curve")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    calibration = host_speed_probe(spark)
-    calibration_single = host_speed_probe_single(spark)
-    print(f"# host_speed_probe: {calibration}s parallel / "
-          f"{calibration_single}s single-thread", file=sys.stderr)
 
     corpus = planted_corpus(spark, args.sf).cache()
     corpus.count()
@@ -239,8 +233,6 @@ def main() -> int:
         "n_centroids": 16,
         "loadavg_start": loadavg_start,
         "loadavg_end": [round(v, 2) for v in os.getloadavg()],
-        "calibration_sec": calibration,
-        "calibration_single_sec": calibration_single,
         "cpu_count": os.cpu_count(),
         "families": results,
     }

@@ -39,7 +39,6 @@ from map_reduce_c_sharp_simulation_multithreaded_spark.operators.dedup import (
 )
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
     get_spark,
-    host_speed_probe,
 )
 
 L = 50
@@ -120,8 +119,6 @@ def main() -> int:
     spark = get_spark("mrcs_contamination_broadcast")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    calibration = host_speed_probe(spark)
-    print(f"# host_speed_probe: {calibration}s", file=sys.stderr)
 
     d = load_table(spark, args.sf, "documents").select("doc_id", "text")
     is_eval = F.col("doc_id") % 20 == 7
@@ -154,7 +151,6 @@ def main() -> int:
 
     artifact = {
         "sf_dir": args.sf,
-        "calibration_sec": calibration,
         "cpu_count": os.cpu_count(),
         "min_len": L,
         "variants": rows,

@@ -70,7 +70,6 @@ from map_reduce_c_sharp_simulation_multithreaded_spark.operators.dedup import (
 )
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
     get_spark,
-    host_speed_probe,
 )
 
 L = 50
@@ -377,8 +376,6 @@ def main() -> int:
 
     spark = get_spark("mrcs_exactsubstr_scaling")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    calibration = host_speed_probe(spark)
-    print(f"# host_speed_probe: {calibration}s", file=sys.stderr)
 
     if args.ladder_only:
         artifact = {}
@@ -386,12 +383,10 @@ def main() -> int:
             with open(args.json, encoding="utf-8") as fh:
                 artifact = json.load(fh)
         artifact["recompute_trade_ladder"] = {
-            "calibration_sec": calibration,
             "rungs": recompute_trade_ladder(spark),
         }
     else:
         artifact = {
-            "calibration_sec": calibration,
             "cpu_count": os.cpu_count(),
             "min_len": L,
             "funnel": funnel(spark),
@@ -399,7 +394,6 @@ def main() -> int:
             "longdoc_full_pipeline": longdoc_full(spark),
             "window_vs_groupby_sf0.1": window_vs_groupby(spark),
             "recompute_trade_ladder": {
-                "calibration_sec": calibration,
                 "rungs": recompute_trade_ladder(spark),
             },
         }

@@ -23,8 +23,9 @@ Each rung materializes the copied edge frame with `localCheckpoint`
 BEFORE the measured region, so the shuffle delta covers the iterative
 loop, not the edge derivation; `spark.catalog.clearCache()` between
 rungs stops pagerank's internal edge cache leaking across rungs.
-Shuffle bytes come from the UI REST stage totals via the same
-`drain_listener_bus` + delta discipline as `tools/shuffle_audit.py`.
+Shuffle bytes come from `tools/shuffle_audit.stage_totals`: each
+rung's loop runs under its own job group, whose completed stages are
+summed from Spark's in-process status store.
 
 Usage: python tools/graph_upper_rungs.py [--json SHUFFLE_SCALING.json]
 (with --json, rows are merged into the artifact under
@@ -43,7 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from shuffle_audit import audit_session, drain_listener_bus, stage_totals
+from shuffle_audit import stage_totals
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.catalog import (
     load_table,
@@ -52,19 +53,17 @@ from map_reduce_c_sharp_simulation_multithreaded_spark.plans.advanced import (
     _loop_partitions,
     pagerank,
 )
+from map_reduce_c_sharp_simulation_multithreaded_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.1"
 BFS_OFFSET = 10_000_000  # far above any sf0.1 suppkey
 
 
-def _measure(spark, app_id: str, action) -> dict[str, int]:
-    drain_listener_bus(spark)
-    before = stage_totals(app_id)
+def _measure(spark, group: str, action) -> dict[str, int]:
+    spark.sparkContext.setJobGroup(group, f"upper rung: {group}")
     action()
-    drain_listener_bus(spark)
-    after = stage_totals(app_id)
-    return {k: after[k] - before[k] for k in after}
+    return stage_totals(spark, group)
 
 
 def supplier_edges(spark):
@@ -162,8 +161,7 @@ def main() -> int:
     args = ap.parse_args()
     ks = [int(x) for x in args.rungs.split(",")]
 
-    spark = audit_session()
-    app_id = spark.sparkContext.applicationId
+    spark = get_spark("mrcs_shuffle_audit")
     out: dict[str, dict] = {}
 
     base_pr = supplier_edges(spark)
@@ -174,7 +172,7 @@ def main() -> int:
         n_edges = ek.count()
         delta = _measure(
             spark,
-            app_id,
+            f"pagerank_suppliers_x{k}",
             lambda ek=ek: pagerank(ek, n_iter=5, loop_partitions=8)
             .orderBy(F.col("rank").desc(), F.col("node"))
             .limit(20)
@@ -206,7 +204,7 @@ def main() -> int:
         sources = [1 + i * BFS_OFFSET for i in range(k)]
         delta = _measure(
             spark,
-            app_id,
+            f"bfs_x{k}",
             lambda ek=ek, s=sources: _bfs_multi_source(spark, ek, s)
             .count(),
         )

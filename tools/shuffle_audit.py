@@ -6,11 +6,13 @@ the hard numbers behind every "one bounded shuffle" claim in SCALE.md.
                                   [--query NAME[,NAME...]]
 
 For each (batch, non-side-effecting) registered query, runs the plan
-once with a NOOP WRITE and records the DELTA of completed-stage
-metrics from Spark's status REST API: shuffle bytes written/read,
-input bytes scanned. Queries run sequentially in one session, so the
-delta is attributable; retried/cached stages mean the numbers are
-per-EXECUTION, which is exactly what a capacity plan wants.
+once with a NOOP WRITE under its own job group and sums that group's
+completed stages from Spark's in-process status store (the store
+``perfbench/tracing.py`` reads): shuffle bytes written/read, input
+bytes scanned, memory+disk spill. The plan is built inside the group,
+so jobs a plan runs while building count too; retried/cached stages
+mean the numbers are per-EXECUTION, which is exactly what a capacity
+plan wants.
 
 The noop write matters (round-11 lesson, learned twice in one
 session): a ``count()`` consumer lets Catalyst prune every column the
@@ -34,8 +36,7 @@ out of line with its plan shape is a bug the timing sweep can't see.
 
 Skips streaming queries (their state-store traffic is STREAM_BENCH's
 job) and the side-effecting sink round-trips (their write volume is
-the point). UI is enabled on a fixed local port for the REST reads —
-this tool builds its own session and must run alone.
+the point). The session is ``get_spark``'s; no UI port is opened.
 """
 
 from __future__ import annotations
@@ -44,19 +45,15 @@ import argparse
 import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.plans import registry
-from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
-    default_cpus,
-    host_speed_probe,
-)
+from map_reduce_c_sharp_simulation_multithreaded_spark.session import get_spark
 
-UI_PORT = 4097
 # side-effecting / sink-measuring queries whose volume is the point
 SKIP = {
     "sink_partitioned_roundtrip",
@@ -66,68 +63,43 @@ SKIP = {
     "scd2_merge_customer_segment",
     "pysource_synthetic_agg",
 }
+COLUMNS = ("shuffle_write_bytes", "shuffle_read_bytes", "input_bytes",
+           "spill_bytes")
 
 
-def audit_session() -> SparkSession:
-    """get_spark's confs with the UI (REST metrics source) enabled."""
-    cpus = default_cpus()
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("mrcs_shuffle_audit")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("MRCS_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.ui.retainedStages", "20000")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config(
-            "spark.sql.warehouse.dir",
-            os.path.join(
-                os.environ.get("TMPDIR", "/tmp"), "mrcs_spark_warehouse"
-            ),
-        )
-        .getOrCreate()
-    )
-
-
-def drain_listener_bus(spark: SparkSession) -> None:
-    """Block until the listener bus has delivered every queued event
-    (ADVICE r11): the UI status store behind ``stage_totals`` is
-    populated ASYNCHRONOUSLY — sampling "after" the moment the noop
-    write returns can miss stages still in the event queue, silently
-    shifting their bytes into the NEXT query's delta."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    try:
-        bus.waitUntilEmpty(30_000)
-    except Exception:
-        bus.waitUntilEmpty()
-
-
-def stage_totals(app_id: str) -> dict[str, int]:
-    url = (
-        f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}"
-        f"/stages?status=complete"
-    )
-    with urllib.request.urlopen(url) as r:
-        data = json.load(r)
-    return {
-        "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in data),
-        "shuffle_read_bytes": sum(s.get("shuffleReadBytes", 0) for s in data),
-        "input_bytes": sum(s.get("inputBytes", 0) for s in data),
+def stage_totals(spark: SparkSession, group: str) -> dict[str, int]:
+    """Byte totals over the COMPLETE stages of every job run under job
+    group ``group``. A stage shared by two of the group's jobs counts
+    once; skipped stages (shuffle output reused from an earlier job)
+    are not COMPLETE and add nothing."""
+    sc = spark.sparkContext
+    # the status store is filled ASYNCHRONOUSLY from the listener bus:
+    # read it the moment the action returns and stages still queued
+    # there are missed
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    stage_ids: set[int] = set()
+    for job in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job)
+        stage_ids.update(info.stageIds if info else ())
+    out = dict.fromkeys(COLUMNS, 0)
+    for stage in stage_ids:
+        try:
+            sd = store.lastStageAttempt(stage)
+        except Py4JJavaError:  # never submitted
+            continue
+        if sd.status().toString() != "COMPLETE":
+            continue
+        out["shuffle_write_bytes"] += sd.shuffleWriteBytes()
+        out["shuffle_read_bytes"] += sd.shuffleReadBytes()
+        out["input_bytes"] += sd.inputBytes()
         # spill is the OOM early-warning the byte columns can't show:
-        # a task that spills at sf0.1 under 128 GiB is a task whose
-        # per-partition working set is already out of proportion —
+        # a task that spills at sf0.1 is a task whose per-partition
+        # working set is already out of proportion —
         # tests/test_shuffle_audit.py pins the registry to ZERO spill
-        "spill_bytes": sum(
-            s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-            for s in data
-        ),
-    }
+        out["spill_bytes"] += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
+    return out
 
 
 def main() -> int:
@@ -137,11 +109,8 @@ def main() -> int:
     ap.add_argument("--query", default=None)
     args = ap.parse_args()
 
-    spark = audit_session()
-    spark.sparkContext.setLogLevel("WARN")
-    app_id = spark.sparkContext.applicationId
+    spark = get_spark("mrcs_shuffle_audit")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    calibration = host_speed_probe(spark)
 
     only = set(args.query.split(",")) if args.query else None
     results: dict[str, dict] = {}
@@ -151,22 +120,15 @@ def main() -> int:
         if name in SKIP or name.startswith("stream_"):
             continue
         try:
-            drain_listener_bus(spark)
-            before = stage_totals(app_id)
+            spark.sparkContext.setJobGroup(name, f"shuffle audit: {name}")
             df = q.fn(spark, args.sf)
             if df.isStreaming:
                 continue
             df.write.format("noop").mode("overwrite").save()
-            drain_listener_bus(spark)
-            after = stage_totals(app_id)
+            row = stage_totals(spark, name)
         except Exception as exc:  # pragma: no cover - audit continues
             results[name] = {"error": str(exc)[:200]}
             continue
-        row = {
-            k: after[k] - before[k]
-            for k in ("shuffle_write_bytes", "shuffle_read_bytes",
-                      "input_bytes", "spill_bytes")
-        }
         results[name] = row
         print(
             f"{name:42s} shufW {row['shuffle_write_bytes']:>12,d}  "
@@ -182,7 +144,6 @@ def main() -> int:
 
     artifact = {
         "sf_dir": args.sf,
-        "calibration_sec": calibration,
         "cpu_count": os.cpu_count(),
         "queries": dict(sorted(results.items())),
     }

@@ -29,8 +29,8 @@ sf0.1 for 10× the rows), so a measured-bytes denominator inflates
 exponents ~2–4× on dimension-heavy queries. Measured input bytes are
 kept per query as a diagnostic (`input_ratio`).
 
-Mechanics: each audit runs in its own subprocess session (the REST
-delta requires running alone). Queries whose sf0.1 shuffle stays
+Mechanics: each scale's audit runs `tools/shuffle_audit.py` in its own
+subprocess session. Queries whose sf0.1 shuffle stays
 under FLOOR_BYTES are classified "bounded" — broadcast / dimension /
 constant-overhead shapes where a ratio of two tiny numbers is noise,
 and whose absolute bound is itself the scale argument.

@@ -42,8 +42,6 @@ from pyspark.sql import functions as F
 from map_reduce_c_sharp_simulation_multithreaded_spark.catalog import load_table
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
     get_spark,
-    host_speed_probe,
-    host_speed_probe_single,
 )
 
 STATE_PARTITIONS = 8  # see run_to_completion's sizing note
@@ -293,10 +291,6 @@ def main() -> int:
     loadavg_start = [round(v, 2) for v in os.getloadavg()]
     spark = get_spark("mrcs_stream_bench")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    calibration = host_speed_probe(spark)
-    calibration_single = host_speed_probe_single(spark)
-    print(f"# host_speed_probe: {calibration}s parallel / "
-          f"{calibration_single}s single-thread", file=sys.stderr)
 
     chunk_dir = chunk_events(spark, args.sf, args.batches)
     results = {}
@@ -365,8 +359,6 @@ def main() -> int:
         "state_partitions": STATE_PARTITIONS,
         "loadavg_start": loadavg_start,
         "loadavg_end": [round(v, 2) for v in os.getloadavg()],
-        "calibration_sec": calibration,
-        "calibration_single_sec": calibration_single,
         "cpu_count": os.cpu_count(),
         "queries": results,
     }

@@ -27,12 +27,10 @@ a committed machine-readable artifact: the driver's stdout tail
 capture (~2 KB) cannot carry 184 timings, so the repo carries them
 instead.
 
-``--diff PREV.json`` compares against a prior round's artifact and
-flags any query whose warm time grew >1.5× (prior warm ≥ 0.25 s —
-below that, constant overhead dominates and ratios are noise): the
-headline-bench watch rule generalized to the whole registry
-(VERDICT.md r6 next-round #5). tests/test_sweep_regressions.py runs
-the same comparison over the two latest committed artifacts.
+``--diff PREV.json`` compares against a prior artifact taken on the
+same host and flags any query whose warm time grew >1.5× (prior warm
+≥ 0.25 s — below that, constant overhead dominates and ratios are
+noise). tests/test_sweep_regressions.py pins the rule on fixtures.
 """
 
 from __future__ import annotations
@@ -49,62 +47,22 @@ from map_reduce_c_sharp_simulation_multithreaded_spark import buildstats
 from map_reduce_c_sharp_simulation_multithreaded_spark.plans import registry
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
     get_spark,
-    host_speed_probe,
-    host_speed_probe_single,
 )
 
 REGRESSION_RATIO = 1.5
 REGRESSION_FLOOR_SEC = 0.25
 
 
-def host_norm(prev: dict, cur: dict) -> float:
-    """Host-speed normalizer (VERDICT.md r7 next-round #4): the ratio
-    of the two artifacts' recorded calibration constants
-    (session.host_speed_probe — a fixed CPU-bound probe), clamped to
-    [0.5, 2.0] so a broken calibration can at most halve/double the
-    bar, never disable it. 1.0 when either artifact predates the
-    field. A slow-host epoch (SCALE.md measured identical code
-    uniformly 1.4-1.5× slower) raises cur's calibration by the same
-    factor as its query times, so dividing the observed ratio by this
-    normalizer separates "slow host" from "slow plan" mechanically —
-    previously human adjudication."""
-    pc, cc = prev.get("calibration_sec"), cur.get("calibration_sec")
-    if pc is None or cc is None:
-        return 1.0  # field predates calibration — uncalibrated compare
-    if pc == 0 or cc == 0:
-        # a zero constant is a BROKEN probe, not a missing field —
-        # falling through truthiness to 1.0 would silently disable
-        # normalization exactly when the record is corrupt (ADVICE r8)
-        raise ValueError(
-            f"calibration_sec is 0 (prev={pc!r}, cur={cc!r}) — broken "
-            f"host_speed_probe record; refuse to compare uncalibrated"
-        )
-    # the probe measures cores × clock: a CORE-COUNT change between
-    # artifacts shifts it for every query — including shuffle/IO-bound
-    # ones that don't scale with cores — indistinguishably from a clock
-    # epoch (ADVICE r8). When both artifacts record cpu_count and they
-    # differ, normalization is confounded: compare raw and say so.
-    pn, cn = prev.get("cpu_count"), cur.get("cpu_count")
-    if pn is not None and cn is not None and pn != cn:
-        print(f"# host_norm: cpu_count changed {pn} -> {cn}; "
-              f"calibration confounded, comparing UNNORMALIZED",
-              file=sys.stderr)
-        return 1.0
-    return min(2.0, max(0.5, cc / pc))
-
-
 def compare_sweeps(prev: dict, cur: dict) -> list[tuple[str, float, float]]:
     """(name, prev_warm, cur_warm) for every query in BOTH artifacts
     whose warm time grew >REGRESSION_RATIO× from a prior warm of at
-    least REGRESSION_FLOOR_SEC — after normalizing the prior warm by
-    the host-speed calibration ratio. Shared by --diff and the pytest
-    gate."""
+    least REGRESSION_FLOOR_SEC. Raw times: compare two sweeps taken on
+    the same host."""
     out = []
-    norm = host_norm(prev, cur)
     pq, cq = prev.get("queries", {}), cur.get("queries", {})
     for name in sorted(set(pq) & set(cq)):
         pw, cw = pq[name]["warm"], cq[name]["warm"]
-        if pw >= REGRESSION_FLOOR_SEC and cw > REGRESSION_RATIO * pw * norm:
+        if pw >= REGRESSION_FLOOR_SEC and cw > REGRESSION_RATIO * pw:
             out.append((name, pw, cw))
     return out
 
@@ -122,16 +80,10 @@ def main() -> int:
                          "against")
     args = ap.parse_args()
 
-    # pre-JVM load sample: the cross-run epoch indicator (SCALE.md
-    # "host-speed epoch" — a re-sweep of identical code once measured
-    # 146.7 s vs a committed 99.7 s, uniformly across families).
+    # pre-JVM load sample: other work already running on the host
     loadavg_start = [round(v, 2) for v in os.getloadavg()]
     spark = get_spark("mrcs_sweep")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
-    calibration = host_speed_probe(spark)
-    calibration_single = host_speed_probe_single(spark)
-    print(f"# host_speed_probe: {calibration}s parallel / "
-          f"{calibration_single}s single-thread", file=sys.stderr)
 
     def evaluate(df) -> None:
         if args.collect:
@@ -181,10 +133,6 @@ def main() -> int:
         "warm_total_sec": round(total, 3),
         "loadavg_start": loadavg_start,
         "loadavg_end": [round(v, 2) for v in os.getloadavg()],
-        "calibration_sec": calibration,
-        "calibration_single_sec": calibration_single,
-        # the probe measures cores × clock; recording the core count
-        # lets host_norm tell a topology change from a clock epoch
         "cpu_count": os.cpu_count(),
         "queries": {
             n: {
@@ -213,17 +161,6 @@ def main() -> int:
     if args.diff:
         with open(args.diff, encoding="utf-8") as fh:
             prev = json.load(fh)
-        # advisory: the gate normalizes by the PARALLEL probe; print
-        # the single-thread ratio too when both artifacts carry it —
-        # round 9 found a driver/JIT epoch the parallel probe is blind
-        # to (see session.host_speed_probe_single), and this line is
-        # what makes that adjudication mechanical next time
-        ps, cs = prev.get("calibration_single_sec"), artifact.get(
-            "calibration_single_sec")
-        if ps and cs:
-            print(f"# single-thread calibration ratio: {cs / ps:.3f} "
-                  f"(parallel: {host_norm(prev, artifact):.3f})",
-                  file=sys.stderr)
         regressions = compare_sweeps(prev, artifact)
         for name, pw, cw in regressions:
             print(f"REGRESSION {name}: {pw}s -> {cw}s "
