@@ -10,10 +10,9 @@ as explicit, tested modes rather than accidents (SURVEY.md §7.3):
   duplicates → ``dedup_dim_last_wins``.
 * unmatched probe keys: the reference THROWS (``D/Program.cs:310``,
   referential-integrity assumption); Spark's inner join silently drops
-  → ``strict_inner_join`` for row-returning callers, and
-  ``strict_join_agg`` for a join feeding an aggregate, which folds the
-  check into the aggregate so the join is evaluated once, as the
-  reference's single probe pass is.
+  → ``strict_join_agg``, a join feeding an aggregate (the reference's
+  only use), which folds the check into the aggregate so the join is
+  evaluated once, as the reference's single probe pass is.
 """
 
 from __future__ import annotations
@@ -42,31 +41,6 @@ def dedup_dim_last_wins(
     )
 
 
-def strict_inner_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str | list[str] | Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Inner join that FAILS if any probe row has no build match.
-
-    Reproduces the reference's referential-integrity assumption — its
-    probe throws ``KeyNotFoundException`` on a missing dimension key
-    (``D/Program.cs:310``) — as a distributed check: a left-anti probe
-    for violations (stops at the first match via ``take(1)``), then the
-    ordinary inner join. The check and the caller's later action each
-    evaluate the join, so a caller that aggregates the join should use
-    :func:`strict_join_agg`, which evaluates it once. No driver-side row
-    state.
-    """
-    violations = probe.join(build, on, "left_anti").take(1)
-    if violations:
-        raise ValueError(
-            f"strict join: probe row without build match: {violations[0]}"
-        )
-    return probe.join(build, on, how)
-
-
 def strict_join_agg(
     probe: DataFrame,
     build: DataFrame,
@@ -77,7 +51,9 @@ def strict_join_agg(
     """``probe ⋈ build`` grouped by ``group_by`` into ``aggs``; FAILS if
     any probe row has no build match.
 
-    The same contract as :func:`strict_inner_join` followed by
+    Reproduces the reference's referential-integrity assumption — its
+    probe throws ``KeyNotFoundException`` on a missing dimension key
+    (``D/Program.cs:310``) — for an inner join followed by
     ``groupBy(*group_by).agg(*aggs)``, in one evaluation: the probe is
     left-joined to ``build`` carrying a constant ``_hit`` marker, and the
     aggregate also groups by whether the marker matched, keeping the

@@ -3,10 +3,9 @@
 Image/audio/video cells are opaque ``binary`` columns with a typed
 metadata struct alongside; decode / feature-extraction runs as
 Arrow-batched ``mapInPandas`` so bytes never round-trip through Python
-row objects. The decode libraries (PIL/torchaudio/av) are NOT in this
-container, so the real decode is gated behind an import-try and the
-pipeline ships a deterministic fake extractor — the Spark-side plumbing
-(schema, partitioning, UDF signature, batch shape) is real and tested.
+row objects. The pipeline ships a deterministic fake decode (no
+PIL/torchaudio/av dependency) — the Spark-side plumbing (schema,
+partitioning, UDF signature, batch shape) is real and tested.
 """
 
 from __future__ import annotations
@@ -42,18 +41,6 @@ def attach_binary_payload(df: DataFrame, text_col: str, id_col: str) -> DataFram
     )
 
 
-def _real_decode(payload: bytes) -> tuple[int, int, int]:
-    """Actual media decode — requires libs not present in this image."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - exercised by design
-        raise NotImplementedError(
-            "media decode requires PIL/torchaudio; not available in this "
-            "container — deterministic fake features are used instead"
-        ) from exc
-    raise NotImplementedError("real decode path reserved for image builds")
-
-
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     """Deterministic stand-in for decode: pseudo width/height/channels
     derived from the payload hash (stable across runs/executors)."""
@@ -61,18 +48,16 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return (h[0] % 128 + 1, h[1] % 128 + 1, (h[2] % 3) + 1)
 
 
-def extract_features(df: DataFrame, use_real_decode: bool = False) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     ``mapInPandas``: one pandas batch in, one out, no per-row pickling.
     Columns in: (doc_id, payload, meta); out: FEATURE_SCHEMA.
     """
-    decode = _real_decode if use_real_decode else _fake_decode
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf["payload"]
-            dims = [decode(bytes(p)) for p in payloads]
+            dims = [_fake_decode(bytes(p)) for p in payloads]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -128,10 +113,9 @@ def resize_plan(df: DataFrame) -> DataFrame:
     """Fake-decode + fit-in-a-64-box integer resize plan per payload —
     the thumbnail/preprocess shape: decode dims, compute the target
     size with pure integer math (floor-scaled by the longer edge,
-    clamped to ≥1), emit the plan. The actual pixel resample would run
-    here too (PIL.Image.resize), import-gated like ``_real_decode``;
-    the plan itself is deterministic digest arithmetic, so it carries
-    a full oracle."""
+    clamped to ≥1), emit the plan. A real pipeline would run the pixel
+    resample (PIL.Image.resize) here too; the plan itself is
+    deterministic digest arithmetic, so it carries a full oracle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -11,10 +11,13 @@ joins — each step a bounded shuffle, no driver-side graph state.
 
 from __future__ import annotations
 
+import itertools
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..buildstats import memo_build
 from ..catalog import load_table, load_tables
 from ..operators.text import winnow_fp_pairs
 from ..session import pin_session
@@ -326,7 +329,9 @@ def _min_label_body(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     ).cache()
     labels = nodes.withColumn("label", F.col("node"))
     prev_cache = None
-    for i in range(10):  # diameter cap; dedup components are shallow
+    # until no label changes: the minimum moves one hop per round, so a
+    # chain of n nodes needs n - 1 rounds
+    for i in itertools.count():
         neighbor_min = (
             adj.join(labels, adj.id_b == labels.node)
             .groupBy(adj.id_a)
@@ -369,37 +374,9 @@ def _min_label_body(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     # Pin the result as its own blocks, then drop the function-internal
     # caches (ADVICE r5 / sweep-accumulation hygiene, same as pagerank).
     final = labels.localCheckpoint()
-    for frame in (prev_cache, adj):
-        if frame is not None:
-            frame.unpersist()
+    prev_cache.unpersist()
+    adj.unpersist()
     return final
-
-
-_CLUSTER_LABELS: dict[tuple, DataFrame] = {}
-
-
-def _documents_fingerprint(sf_dir: str) -> tuple:
-    """(path, size, mtime_ns) of every file under documents.parquet —
-    the memo key discipline of the trained ANN codebooks (ADVICE r5):
-    an in-process rewrite of the corpus invalidates the entry."""
-    import os
-
-    root = os.path.join(sf_dir, "documents.parquet")
-    paths = [root]
-    if os.path.isdir(root):
-        paths = sorted(
-            os.path.join(dp, f)
-            for dp, _, files in os.walk(root)
-            for f in files
-        )
-    out = []
-    for pth in paths:
-        try:
-            st = os.stat(pth)
-            out.append((pth, st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((pth, -1, -1))
-    return tuple(out)
 
 
 def _fp_cluster_labels(
@@ -410,26 +387,22 @@ def _fp_cluster_labels(
     by lo..hi docs (the rare-fp boilerplate cut keep-best and the
     leakage-safe split use); ``band=None`` is the full shared-fp graph
     (dedup_connected_components). Eager-checkpointed by
-    :func:`_min_label_components` and MEMOIZED per (dataset, band):
-    the near-dup cluster index is a build-once/use-many artifact —
-    keep-best and the split consume the SAME clusters (consistency
-    pinned in tests/test_round7_ops.py), and repeat invocations of any
-    consumer pay retrieval only — so the iterative loop runs once per
-    corpus, not once per consumer. Same build/search split as the
-    trained ANN codebooks; at 100 TB the labels frame would be written
-    to parquet at curation time and read by every downstream job. The
-    memoized frame is a checkpointed RDD (no cache entry to leak), and
-    a fresh process always rebuilds, so plan fingerprints are computed
-    on the real build, never a memo hit."""
-    key = (sf_dir, _documents_fingerprint(sf_dir), band)
-    got = _CLUSTER_LABELS.get(key)
-    if got is not None:
-        return got
-    import time as _time
+    :func:`_min_label_components` and built once per (dataset, band)
+    through :func:`memo_build`: keep-best and the split consume the
+    SAME clusters (consistency pinned in tests/test_round7_ops.py), so
+    the iterative loop runs once per corpus, not once per consumer. At
+    100 TB the labels frame would be written to parquet at curation
+    time and read by every downstream job. The memoized frame is a
+    checkpointed RDD (no cache entry to leak)."""
+    return memo_build(
+        "cluster_index", f"fp_cluster_labels band={band}", sf_dir,
+        "documents", band, lambda: _build_fp_cluster_labels(d, band),
+    )
 
-    from ..buildstats import record_build
 
-    t0 = _time.perf_counter()
+def _build_fp_cluster_labels(
+    d: DataFrame, band: tuple[int, int] | None
+) -> DataFrame:
     doc_fp = _winnow_doc_fp(d)
     if band is not None:
         lo, hi = band
@@ -452,9 +425,6 @@ def _fp_cluster_labels(
         d.select(F.col("doc_id").alias("node")), edges
     )
     edges.unpersist()
-    record_build("cluster_index", _time.perf_counter() - t0,
-                 f"fp_cluster_labels band={band}")
-    _CLUSTER_LABELS[key] = labels
     return labels
 
 

@@ -1,9 +1,8 @@
 """Multimodal-column queries (LLM-pipeline surface, north star §2.4).
 
 Binary payload metadata is oracle-checked (byte length, sha256, first
-byte — all JVM-side). The mapInPandas feature extractor's fake decode
-is sha-digest arithmetic, so it is oracle-checked too; the real decode
-stays import-gated behind ``use_real_decode``.
+byte — all JVM-side). The mapInPandas feature extractor's decode is
+sha-digest arithmetic, so it is oracle-checked too.
 """
 
 from __future__ import annotations

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..buildstats import memo_build
 from ..catalog import load_table
 from ..operators.similarity import (
     ivfpq_rerank_topk,
@@ -488,39 +489,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# trained k-means codebooks, keyed (sf_dir, data fingerprint, k,
-# n_iter, dim) — see the sim_ivf_trained_topk docstring for why
-# memoizing the BUILD step is the production IVF shape, not a bench
-# shortcut
-_TRAINED_CODEBOOKS: dict[tuple, list[list[float]]] = {}
-
-
-def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    """Cheap data fingerprint for the codebook memo key (ADVICE r5):
-    (path, size, mtime_ns) of every file under ``embeddings.parquet``.
-    If a harness regenerates the parquet in-process, the key changes and
-    the codebook retrains instead of silently serving stale centroids
-    against a freshly-derived oracle."""
-    import os
-
-    root = os.path.join(sf_dir, "embeddings.parquet")
-    paths = [root]
-    if os.path.isdir(root):
-        paths = sorted(
-            os.path.join(d, f)
-            for d, _, files in os.walk(root)
-            for f in files
-        )
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            out.append((p, st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((p, -1, -1))
-    return tuple(out)
-
-
 def _trained_ivf_oracle(sf_dir: str) -> str:
     """GENERATED oracle for the trained-IVF query (VERDICT.md r4
     missing #1 / next-round #4): re-derive the k-means codebook from
@@ -563,33 +531,18 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated DuckDB oracle — built from an independent pure-Python
     training replay — differentially tests the retrieval stage.
 
-    The trained codebook is memoized per dataset directory: IVF index
-    BUILD is a one-time offline step while SEARCH runs per query (the
-    FAISS train/add/search split), so repeat invocations against the
-    same unchanged data reuse the codebook and pay only the retrieval
-    plan. Training is deterministic in replayable mode, so the memo
-    changes nothing but wall-clock; a first (cold) call still reports
-    the full build cost. Keyed on (sf_dir, file size+mtime fingerprint)
-    — rewriting the files under sf_dir in-process invalidates the memo
-    and retrains (ADVICE r5 #1).
+    The codebook is built once per dataset through :func:`memo_build`.
     """
     pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
-    memo_key = (sf_dir, _embeddings_fingerprint(sf_dir), 8, 3, 64)
-    cents = _TRAINED_CODEBOOKS.get(memo_key)
-    if cents is None:
-        import time as _time
-
-        from ..buildstats import record_build
-
-        t0 = _time.perf_counter()
-        cents = train_kmeans_codebook(
+    cents = memo_build(
+        "kmeans_codebook", "sim_ivf_trained_topk k=8", sf_dir,
+        "embeddings", (8, 3, 64),
+        lambda: train_kmeans_codebook(
             e, "embedding", n_centroids=8, n_iter=3, dim=64,
             id_col="vec_id", sum_quantize=1e-6,
-        )
-        record_build("kmeans_codebook", _time.perf_counter() - t0,
-                     "sim_ivf_trained_topk k=8")
-        _TRAINED_CODEBOOKS[memo_key] = cents
+        ),
+    )
     return ivf_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",
         k=5, n_probe=2, dim=64, centroids=cents,
@@ -888,27 +841,17 @@ def dedup_semantic_clusters_scaled(
 
 def _trained_semdedup_codebook(emb: DataFrame, sf_dir: str) -> list[list[float]]:
     """Spherical k-means codebook at the k∝n schedule (k = n/64, floor
-    16), trained in REPLAYABLE mode and memoized exactly like the
-    trained-IVF codebook: BUILD is a one-time offline step, SEARCH (and
-    here, the dedup verdict) runs per invocation. Keyed on the data
-    fingerprint so in-process parquet rewrites retrain (ADVICE r5)."""
+    16), trained in REPLAYABLE mode; built once per dataset through
+    :func:`memo_build`."""
     k = _semdedup_scaled_k(sf_dir)
-    memo_key = ("semdedup", sf_dir, _embeddings_fingerprint(sf_dir), k, 3, 64)
-    cents = _TRAINED_CODEBOOKS.get(memo_key)
-    if cents is None:
-        import time as _time
-
-        from ..buildstats import record_build
-
-        t0 = _time.perf_counter()
-        cents = train_kmeans_codebook(
+    return memo_build(
+        "kmeans_codebook", f"semdedup_trained k={k}", sf_dir,
+        "embeddings", ("semdedup", k, 3, 64),
+        lambda: train_kmeans_codebook(
             emb, "embedding", n_centroids=k, n_iter=3, dim=64,
             id_col="vec_id", sum_quantize=1e-6,
-        )
-        record_build("kmeans_codebook", _time.perf_counter() - t0,
-                     f"semdedup_trained k={k}")
-        _TRAINED_CODEBOOKS[memo_key] = cents
-    return cents
+        ),
+    )
 
 
 def _semantic_dedup_trained_oracle(sf_dir: str) -> str:
@@ -1343,26 +1286,18 @@ def sim_range_search_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _trained_pq_books(
     e: DataFrame, sf_dir: str
 ) -> list[list[list[float]]]:
-    """Memoized per dataset fingerprint, exactly like the trained
-    coarse codebooks: PQ training is index BUILD (one-time, labeled in
-    the build ledger); encode+search pay per query."""
-    memo_key = ("pq", sf_dir, _embeddings_fingerprint(sf_dir), 8, 16, 3)
-    books = _TRAINED_CODEBOOKS.get(memo_key)
-    if books is None:
-        import time as _time
+    """PQ sub-codebooks trained on the raw vectors; built once per
+    dataset through :func:`memo_build` (encode+search pay per query)."""
+    from ..operators.similarity import train_pq_codebooks
 
-        from ..buildstats import record_build
-        from ..operators.similarity import train_pq_codebooks
-
-        t0 = _time.perf_counter()
-        books = train_pq_codebooks(
+    return memo_build(
+        "pq_codebooks", "sim_ivfpq_trained_topk m=8 k=16", sf_dir,
+        "embeddings", ("pq", 8, 16, 3),
+        lambda: train_pq_codebooks(
             e, "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
             id_col="vec_id", sum_quantize=1e-6,
-        )
-        record_build("pq_codebooks", _time.perf_counter() - t0,
-                     "sim_ivfpq_trained_topk m=8 k=16")
-        _TRAINED_CODEBOOKS[memo_key] = books
-    return books
+        ),
+    )
 
 
 def _trained_ivfpq_oracle(sf_dir: str) -> str:
@@ -1426,34 +1361,26 @@ def sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _trained_residual_pq_books(
     e: DataFrame, sf_dir: str
 ) -> list[list[list[float]]]:
-    """Memoized residual-trained sub-codebooks: train_pq_codebooks over
-    the (id, x − centroid[argmax cell]) frame, sha coarse centroids.
-    BUILD-labeled like every other one-time index cost."""
-    memo_key = ("pq_resid", sf_dir, _embeddings_fingerprint(sf_dir),
-                8, 16, 3)
-    books = _TRAINED_CODEBOOKS.get(memo_key)
-    if books is None:
-        import time as _time
+    """Residual-trained sub-codebooks: train_pq_codebooks over the
+    (id, x − centroid[argmax cell]) frame, sha coarse centroids; built
+    once per dataset through :func:`memo_build`."""
+    from ..operators.similarity import (
+        _deterministic_centroids,
+        residual_frame,
+        train_pq_codebooks,
+    )
 
-        from ..buildstats import record_build
-        from ..operators.similarity import (
-            _deterministic_centroids,
-            residual_frame,
-            train_pq_codebooks,
-        )
-
-        t0 = _time.perf_counter()
-        resid = residual_frame(
-            e, _deterministic_centroids(16, 64), "vec_id", "embedding"
-        )
-        books = train_pq_codebooks(
-            resid, "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
+    return memo_build(
+        "pq_codebooks", "sim_ivfpq_residual_topk m=8 k=16 residual", sf_dir,
+        "embeddings", ("pq_resid", 8, 16, 3),
+        lambda: train_pq_codebooks(
+            residual_frame(
+                e, _deterministic_centroids(16, 64), "vec_id", "embedding"
+            ),
+            "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
             id_col="vec_id", sum_quantize=1e-6,
-        )
-        record_build("pq_codebooks", _time.perf_counter() - t0,
-                     "sim_ivfpq_residual_topk m=8 k=16 residual")
-        _TRAINED_CODEBOOKS[memo_key] = books
-    return books
+        ),
+    )
 
 
 def _residual_ivfpq_oracle(sf_dir: str) -> str:

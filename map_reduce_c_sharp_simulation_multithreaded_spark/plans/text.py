@@ -9,8 +9,6 @@ same thing relationally.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1124,16 +1122,9 @@ def _index_shard_count(spark: SparkSession) -> int:
     tasks, so it must scale with cluster width. Default: the session's
     ``defaultParallelism`` (32 under the bench's local[32], 1000s on
     a real cluster), floored at 16 so a narrow test session still
-    exercises the sharded shape; ``MRCS_INDEX_SHARDS`` overrides for
-    A/B runs. Result-invariant by construction — phase 2 re-merges to
-    the exact first-20-by-doc_id for ANY shard count ≥ 1."""
-    env = os.environ.get("MRCS_INDEX_SHARDS")
-    if env:
-        if not env.strip().isdigit():
-            raise ValueError(
-                f"MRCS_INDEX_SHARDS must be a positive integer, got {env!r}"
-            )
-        return max(1, int(env))
+    exercises the sharded shape. Result-invariant by construction —
+    phase 2 re-merges to the exact first-20-by-doc_id for ANY shard
+    count ≥ 1."""
     return max(16, spark.sparkContext.defaultParallelism)
 
 
@@ -1184,7 +1175,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(rows_per_term/S) non-spillable phase-1 buffer) across S
     tasks — and phase 2 merges ≤ S×20 survivors per term, a bounded
     array; S comes from :func:`_index_shard_count` (defaultParallelism,
-    env-overridable), so the documented scaling knob exists as a
+    floored at 16), so the documented scaling knob exists as a
     parameter, not a literal. df/total_tf aggregate the UNCAPPED
     (tok, doc)
     table with plain combiner-friendly aggregates; tf is CACHED so

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.operators.joins import (
     dedup_dim_last_wins,
-    strict_inner_join,
+    strict_join_agg,
 )
 
 
@@ -30,14 +30,19 @@ def test_strict_join_raises_on_missing_key(spark):
     probe = spark.createDataFrame([("d1", 5.0), ("dX", 1.0)], "k string, amt double")
     build = spark.createDataFrame([("d1", "CA")], "k string, state string")
     with pytest.raises(ValueError, match="strict join"):
-        strict_inner_join(probe, build, "k")
+        strict_join_agg(
+            probe, build, "k", [F.col("state")], [F.sum("amt").alias("amt")]
+        )
 
 
 def test_strict_join_passes_when_ri_holds(spark):
     probe = spark.createDataFrame([("d1", 5.0), ("d1", 2.0)], "k string, amt double")
     build = spark.createDataFrame([("d1", "CA")], "k string, state string")
-    out = strict_inner_join(probe, build, "k")
-    assert out.count() == 2
+    out = strict_join_agg(
+        probe, build, "k", [F.col("state")],
+        [F.count(F.lit(1)).alias("n"), F.sum("amt").alias("amt")],
+    )
+    assert [(r.state, r.n, r.amt) for r in out.collect()] == [("CA", 2, 7.0)]
 
 
 def test_salted_join_equals_plain_join(spark):

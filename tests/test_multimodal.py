@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: payload schema, Arrow batch extraction,
-decode stub gating, determinism."""
+determinism."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import hashlib
 import pytest
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.operators.multimodal import (
-    _real_decode,
     attach_binary_payload,
     extract_features,
 )
@@ -40,8 +39,3 @@ def test_feature_extraction_deterministic(docs):
     assert f1 == f2
     assert f1[1][0] == hashlib.sha256(b"hello world").hexdigest()
     assert all(1 <= v[1] <= 128 and 1 <= v[3] <= 3 for v in f1.values())
-
-
-def test_real_decode_is_import_gated():
-    with pytest.raises(NotImplementedError, match="decode requires"):
-        _real_decode(b"payload")

@@ -79,6 +79,23 @@ def test_min_label_components_equal_union_find(spark, edges):
     assert got == want
 
 
+def test_min_label_components_converge_on_long_path(spark):
+    """A 12-node path needs 11 label rounds: the loop runs to its
+    fixpoint instead of stopping at a fixed round count."""
+    n = 12
+    nodes_df = spark.createDataFrame([(i,) for i in range(n)], "node long")
+    edges_df = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    got = {
+        r["node"]: r["label"]
+        for r in _min_label_components(
+            nodes_df, edges_df, loop_partitions=4
+        ).collect()
+    }
+    assert got == {i: 0 for i in range(n)}
+
+
 LABELS = st.lists(
     st.tuples(st.integers(0, 500), st.integers(0, 60)),  # (doc, cluster)
     min_size=1,

@@ -41,11 +41,11 @@ ALLOWED = {
     # vectors of dim floats — the k-means|| reduction input, bounded
     # by k exactly like the codebook itself)
     os.path.join("operators", "similarity.py"): (6, "codebook floats"),
-    # strict-join missing-key probes (reference throw semantics,
-    # D/Program.cs:310): strict_inner_join's take(1) on a left-anti
-    # join, and strict_join_agg's take(1) on its checkpointed aggregate
-    # (<= 2 rows per group) — at most ONE row crosses to the driver each
-    os.path.join("operators", "joins.py"): (2, "take(1) violation probes"),
+    # strict-join missing-key probe (reference throw semantics,
+    # D/Program.cs:310): strict_join_agg's take(1) on its checkpointed
+    # aggregate (<= 2 rows per group) — at most ONE row crosses to the
+    # driver
+    os.path.join("operators", "joins.py"): (1, "take(1) violation probe"),
     # connected-components convergence probe: take(1) on the
     # changed-labels join — at most one row per iteration
     os.path.join("plans", "advanced.py"): (1, "take(1) convergence probe"),
