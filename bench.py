@@ -4,7 +4,14 @@
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default: the cores in the affinity mask).
 Output: {"metric": ..., "value": total_sec, "unit": "sec",
-         "queries": {name: sec, ...}, "sf": ...}
+         "queries": {name: sec, ...}, "sf": ..., "cpu_count": ...,
+         "cpus": ..., "heavy": {name: sec, ...}}
+
+Every query goes through ``tools/sweep_times.run_queries``, the one
+per-query measurement loop (its docstring says why passes interleave,
+why the consumer is a noop write and why the build ledger is drained
+after every query). ``value`` is the sum of the nine headline queries'
+warm times.
 """
 
 from __future__ import annotations
@@ -13,11 +20,13 @@ import json
 import os
 import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from map_reduce_c_sharp_simulation_multithreaded_spark import buildstats
+from sweep_times import run_queries
+
 from map_reduce_c_sharp_simulation_multithreaded_spark.plans import registry
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
     default_cpus,
@@ -25,119 +34,11 @@ from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
 )
 
 
-# Join-heavy TPC-H shapes + one streaming query, timed alongside the
-# headline set but reported under separate keys so `value` stays
-# comparable round-over-round with BENCH_r01.json's 9-query total.
-EXTRA_BENCH = (
-    "tpch_q5_local_supplier_volume",
-    "tpch_q7_nation_volume",
-    "tpch_q18_large_orders",
-    "tpch_q20_excess_shippers",
-    "stream_tumbling_counts",
-    # round-2 join-heavy additions
-    "tpch_q8_market_share",
-    "tpch_q21_waiting_suppliers",
-    "contamination_eval_overlap",
-    # late round-2: shuffle-heavy text + bounded-frame window shapes
-    "text_inverted_index",
-    "window_rolling_median",
-    # round-3: the two families previously without bench representation
-    "graph_pagerank_suppliers",
-    "events_funnel_view_click_purchase",
-    # round-4 (VERDICT.md r3 #6): the last two §2.4 families without a
-    # timed number — two-stage ANN retrieval and multimodal decode
-    "sim_ivfpq_rerank_topk",
-    "multimodal_decode_features",
-    # round-4 new surface: every family added this round gets a timed
-    # number in the same round it lands
-    "dedup_semantic_clusters",
-    "text_bpe_merges",
-    "embed_pca_power_iteration",
-    "join_bucketed_colocated",
-    "sink_partitioned_roundtrip",
-    # round-5: surface that changed this round gets a timed number —
-    # the trained-IVF query (now the replayable-training path) and the
-    # incremental-dedup probe (now bucketed-index SMJ)
-    "sim_ivf_trained_topk",
-    "dedup_incremental_index",
-    # round-5 new surface: source-quota balancing, temperature mix
-    # weights, ORC roundtrip
-    "dedup_source_quota",
-    "curation_mix_weights",
-    "source_orc_roundtrip",
-    # round-5 late perf pass: every plan the full-sweep audit changed
-    # gets a timed number in the round it changed (SCALE.md "Full-sweep
-    # timing audit" table)
-    "agg_approx_distinct",
-    "text_winnowing_fingerprints",
-    "text_char_ngram_stats",
-    "graph_pagerank_directed",
-    "graph_bfs_supplier_hops",
-    "dedup_connected_components",
-    "pandas_asof_join",
-    # round-6 new surface: mega-source two-phase quota, k∝n SemDeDup,
-    # skew-safe sharded packing, keep-best near-dup collapse
-    "dedup_source_quota_two_phase",
-    "dedup_semantic_clusters_scaled",
-    "pack_sequences_sharded",
-    "curation_cluster_keep_best",
-    # round-7 new surface: trained-codebook k∝n SemDeDup and the
-    # composed sessionize→funnel→attribution pipeline
-    "dedup_semantic_clusters_trained",
-    "events_session_funnel_attribution",
-    "split_cluster_leakage_safe",
-    # round-8 new surface: composed multimodal near-dup pipeline and
-    # the ANN recall@k quality measurement
-    "multimodal_pipeline_neardup",
-    "sim_ann_recall_at_k",
-    # round-9 new surface: planted-cluster recall (the corpus with
-    # structure the index can actually exploit) and trained-PQ
-    # retrieval (the measured answer to the sha-codebook plateau)
-    "sim_ann_recall_planted",
-    "sim_ivfpq_trained_topk",
-    "sim_ivfpq_residual_topk",
-    # round-9 late debuts: SQ8 compressed-domain search (zero-training
-    # member of the quantization family) and BM25 retrieval
-    "sim_sq8_topk",
-    "text_bm25_topk",
-    # round-9 late perf pass: the tokenize-once text-retrieval
-    # restructure (same-round timed number; text_inverted_index is
-    # already above)
-    "text_tfidf_topk",
-    "text_bigram_lm",
-    "text_pmi_collocations",
-    # round-9 hybrid-retrieval debut
-    "retrieval_hybrid_rrf",
-    # round-10 debuts: exact all-pairs Jaccard via prefix filtering,
-    # DSIR importance weighting toward the Gopher-pass distribution
-    "dedup_jaccard_prefix_join",
-    "curation_dsir_importance",
-    # late round-10 debuts: fuzzy decontamination (bipartite MinHash
-    # with a broadcast eval side) and IVF range search (the
-    # shuffle-free cut)
-    "contamination_fuzzy_minhash",
-    "sim_range_search_planted",
-    # round-11 debuts: ExactSubstr duplicate spans (gram-hash prune →
-    # literal verify → island merge), span-level decontamination
-    # (broadcast eval gram set, zero train-side shuffle), and
-    # budget-constrained mixture sampling
-    "dedup_exact_substr_spans",
-    "contamination_span_overlap",
-    "curation_budget_mixture",
-    # round-12 debuts: ExactSubstr surgery (the deduplicated corpus as
-    # kept segments — detector plan + one id-keyed join) and its
-    # bipartite twin (the decontaminated training corpus)
-    "dedup_cut_spans",
-    "contamination_cut_spans",
-)
-
-
 # The two genuinely heavy optimized queries, reported per run under a
 # separate "heavy" key next to the headline set: the nine headline
 # queries are sub-second session-floor shapes, these two carry signal.
-# They stay in EXTRA_BENCH and are NEVER added into "queries"/"value",
-# so the headline total remains comparable with BENCH_r01.json's
-# 9-query sum.
+# They are NEVER added into "queries"/"value", so the headline total
+# remains comparable with BENCH_r01.json's 9-query sum.
 HEAVY_REPORT = ("dedup_exact_substr_spans", "graph_pagerank_suppliers")
 
 
@@ -154,75 +55,49 @@ def main() -> int:
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
 
     all_q = registry.all_queries()
-    headline = sorted(registry.headline_queries())
-    assert not (set(EXTRA_BENCH) & set(headline))
+    # The headline set runs SIX interleaved passes: the min over the
+    # extra samples damps uniform host noise on sub-second queries at
+    # ~15 s of added wall. The heavy pair runs four.
+    rows = run_queries(
+        spark, {n: all_q[n].fn for n in sorted(registry.headline_queries())},
+        sf_dir, passes=6,
+    )
+    heavy = run_queries(spark, {n: all_q[n].fn for n in HEAVY_REPORT}, sf_dir,
+                        passes=4)
+    ran = {**rows, **heavy}
+    errors = {n: r["error"] for n, r in ran.items() if "error" in r}
+    for name, err in errors.items():
+        print(f"ERR {name}: {err}", file=sys.stderr)
+    if errors:
+        return 1
+    builds = {n: r["builds"] for n, r in ran.items() if "builds" in r}
+    for name, r in ran.items():
+        tag = (f" (+{sum(b['sec'] for b in builds[name]):.2f}s BUILD)"
+               if name in builds else "")
+        print(f"# {name}: {r['warm']}s warm / {r['cold']}s cold{tag}",
+              file=sys.stderr)
+    times = {n: r["warm"] for n, r in rows.items()}
 
-    # INTERLEAVED passes over the whole set: each query is sampled at
-    # well-separated points in time, so a host-level contention burst
-    # (observed: identical code swinging 5.9s -> 8.1s between runs on
-    # this VM) cannot depress every sample of a query the way
-    # back-to-back repeats can. First pass pays JIT/page-cache warmup
-    # (reported as cold); min across passes is the steady-state number
-    # a long-running cluster job would see. The HEADLINE set runs SIX
-    # passes (VERDICT.md r6 next-round #2a: round 6's 12% driver-channel
-    # drift was uniform +0.05-0.15s noise across unrelated queries —
-    # two extra samples per query lower the min's variance at ~15s
-    # added wall); the extras set keeps four (40+ queries, the sweep
-    # artifact is their real perf record).
-    # BUILD ledger (ADVICE r8): EXTRA_BENCH queries can pay one-time
-    # memoized builds (e.g. dedup_semantic_clusters_trained's codebook)
-    # on their first pass; drain after EVERY timed query so the cold
-    # number is labeled, not misread as plan cost — the same split
-    # sweep_times.py already records.
-    builds: dict[str, list[dict]] = {}
-    buildstats.drain()  # clear anything an import-time path left
-
-    def run_set(
-        names: list[str], passes: int = 4
-    ) -> tuple[dict[str, float], dict[str, float]]:
-        runs: dict[str, list[float]] = {n: [] for n in names}
-        for _ in range(passes):
-            for name in names:
-                t0 = time.perf_counter()
-                all_q[name].fn(spark, sf_dir).collect()
-                runs[name].append(time.perf_counter() - t0)
-                paid = buildstats.drain()
-                if paid:
-                    builds.setdefault(name, []).extend(paid)
-        times = {n: round(min(r), 3) for n, r in runs.items()}
-        cold = {n: round(r[0], 3) for n, r in runs.items()}
-        for name in names:
-            tag = (f" (+{sum(b['sec'] for b in builds[name]):.2f}s BUILD)"
-                   if name in builds else "")
-            print(f"# {name}: {times[name]}s warm / {cold[name]}s cold{tag}",
-                  file=sys.stderr)
-        return times, cold
-
-    times, cold = run_set(headline, passes=6)
-    extra_times, extra_cold = run_set(sorted(EXTRA_BENCH))
-
-    # Full breakdown (cold + extras) goes to STDERR and to the committed
-    # BENCH_DETAIL.json artifact; stdout carries only the compact
-    # headline summary line.
+    # Full breakdown goes to STDERR and to the committed BENCH_DETAIL.json
+    # artifact; stdout carries only the compact headline summary line.
+    # Per-query numbers for every other query come from
+    # tools/sweep_times.py, which runs them through the same loop.
     detail = {
         "sf": sf,
-        "cold_queries": cold,
-        "extra_total": round(sum(extra_times.values()), 3),
-        "extra_queries": extra_times,
-        "extra_cold_queries": extra_cold,
+        # cold (first-pass) times of the headline and heavy queries
+        "cold_queries": {n: r["cold"] for n, r in ran.items()},
         "loadavg_start": loadavg_start,
         "loadavg_end": [round(v, 2) for v in os.getloadavg()],
         "cpu_count": os.cpu_count(),
         "cpus": cpus,
-        # one-time memoized builds paid during timed passes (ADVICE r8):
-        # labeled here so a cold codebook training is never read as the
-        # paying query's plan cost
+        # one-time memoized builds paid during timed passes, labeled so
+        # a cold codebook training is never read as the paying query's
+        # plan cost
         "builds": builds,
     }
     print("DETAIL " + json.dumps(detail), file=sys.stderr)
-    artifact = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH_DETAIL.json")
-    with open(artifact, "w", encoding="utf-8") as fh:
+    with open(os.path.join(REPO, "BENCH_DETAIL.json"), "w",
+              encoding="utf-8") as fh:
         json.dump(detail, fh, indent=0, sort_keys=True)
         fh.write("\n")
 
@@ -233,15 +108,12 @@ def main() -> int:
         "queries": times,
         "sf": sf,
         "cpu_count": os.cpu_count(),
-        # the resolved SPARK_GRAFT_CPUS grant — the local[N] the
-        # session actually ran with (cpu_count stays alongside as the
-        # machine topology; VERDICT r14 next-round #3)
+        # the resolved SPARK_GRAFT_CPUS grant: the local[N] the session
+        # actually ran with (cpu_count is the machine topology)
         "cpus": cpus,
-        # the two heavy optimized plans, timed from EXTRA_BENCH's
-        # four interleaved passes (warm min) — additions-only, never
-        # folded into "value" (see HEAVY_REPORT)
-        "heavy": {n: extra_times[n] for n in HEAVY_REPORT
-                  if n in extra_times},
+        # the two heavy optimized plans (warm min), never folded into
+        # "value" (see HEAVY_REPORT)
+        "heavy": {n: r["warm"] for n, r in heavy.items()},
     }
     print(json.dumps(out))
     return 0

@@ -12,9 +12,10 @@ only the retrieval plan.
 
 A timing harness that can't see the build mis-reads that cold spike as
 the query's plan cost. The memo-miss branch calls :func:`record_build`;
-tools/sweep_times.py and bench.py drain the ledger after each query's
-passes and attach ``build_sec``/``builds`` to that query's entry, so
-the record separates BUILD from SEARCH explicitly.
+the one measurement loop, ``tools/sweep_times.run_queries`` (bench.py,
+the sweep and the shuffle audit all call it), drains the ledger after
+every query and attaches ``builds`` to that query's row, so the record
+separates BUILD from SEARCH explicitly.
 
 Process-local and intentionally tiny: no locks (the harnesses are
 single-threaded drivers), no persistence (a fresh process rebuilds and

@@ -126,14 +126,14 @@ def test_spill_gate_fails_not_skips_without_column():
 
 
 def test_stage_totals_sum_only_the_job_group(spark):
-    """``tools/shuffle_audit.stage_totals`` reads the in-process status
+    """``tools/sweep_times.stage_totals`` reads the in-process status
     store per job group: a shuffling write under group A shows shuffle
     bytes, and a later action under group B neither counts A's stages
     nor changes A's totals."""
     import sys
 
     sys.path.insert(0, os.path.join(REPO, "tools"))
-    from shuffle_audit import stage_totals
+    from sweep_times import stage_totals
 
     sc = spark.sparkContext
     try:

@@ -1,5 +1,9 @@
-"""The sweep diff rule behind ``tools/sweep_times.py --diff``: no query
->1.5× its prior warm time, over the queries both sweeps carry.
+"""The sweep's measurement loop and its diff rule.
+
+``run_queries`` is the one per-query loop bench.py, the sweep and the
+shuffle audit all call. The diff rule behind ``tools/sweep_times.py
+--diff``: no query >1.5× its prior warm time, over the queries both
+sweeps carry.
 
 Queries with prior warm < 0.25 s are exempt (constant overhead
 dominates; ratios there are noise), as are queries present in only one
@@ -34,3 +38,50 @@ def test_compare_sweeps_raw_rules():
         ("q", 0.25, 0.38)
     ]
     assert compare_sweeps({}, cur) == []
+
+
+def test_run_queries_clears_cache_attaches_builds_and_isolates_errors(
+    spark, sf_dir
+):
+    """Pass-major, per query: pass 0's byte columns cover only pass 0's
+    job group, the cache a plan leaves is cleared after every query (so
+    pass 1 shuffles again instead of reading cached blocks), a build is
+    attached to the query that paid it, and a query that raises is
+    reported once and not run again."""
+    from sweep_times import run_queries, stage_totals
+
+    from map_reduce_c_sharp_simulation_multithreaded_spark import buildstats
+
+    calls = {"raises": 0}
+
+    def cached(spark, sf_dir):
+        return spark.range(100_000).repartition(3).cache()
+
+    def builds(spark, sf_dir):
+        buildstats.record_build("test_build", 0.5, "in-test")
+        return spark.range(10)
+
+    def raises(spark, sf_dir):
+        calls["raises"] += 1
+        raise ValueError("planted failure")
+
+    out = run_queries(
+        spark, {"cached": cached, "raises": raises, "builds": builds},
+        sf_dir, passes=2,
+    )
+
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    row = out["cached"]
+    assert row["shuffle_write_bytes"] > 0
+    pass0 = stage_totals(spark, "cached#0")
+    pass1 = stage_totals(spark, "cached#1")
+    assert pass1["shuffle_write_bytes"] > 0  # recomputed, not read cached
+    assert row["shuffle_write_bytes"] == pass0["shuffle_write_bytes"]
+    assert 0 < row["warm"] <= row["cold"]
+    assert "builds" not in row
+    assert [b["kind"] for b in out["builds"]["builds"]] == [
+        "test_build", "test_build"
+    ]
+    assert out["raises"] == {"error": "ValueError: planted failure"}
+    assert calls["raises"] == 1
+    assert buildstats.drain() == []

@@ -23,7 +23,7 @@ Each rung materializes the copied edge frame with `localCheckpoint`
 BEFORE the measured region, so the shuffle delta covers the iterative
 loop, not the edge derivation; `spark.catalog.clearCache()` between
 rungs stops pagerank's internal edge cache leaking across rungs.
-Shuffle bytes come from `tools/shuffle_audit.stage_totals`: each
+Shuffle bytes come from `tools/sweep_times.stage_totals`: each
 rung's loop runs under its own job group, whose completed stages are
 summed from Spark's in-process status store.
 
@@ -44,7 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from shuffle_audit import stage_totals
+from sweep_times import stage_totals
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.catalog import (
     load_table,
