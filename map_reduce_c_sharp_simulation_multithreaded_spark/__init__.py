@@ -8,8 +8,10 @@ execution, Structured Streaming for streams, Pandas UDFs only where the
 built-in operators cannot express the semantics.
 
 Layout:
-- ``session``    — SparkSession factory tuned for local[32] testing and
-                   100 TB-scale posture (AQE, skew join, partition sizing).
+- ``session``    — the one session posture: ``local[N]`` from the
+                   ``default_cpus()`` grant, AQE, skew join, UTC and
+                   partition sizing, set by ``get_spark`` and by
+                   ``pin_session`` (which the query registry runs).
 - ``schemas``    — explicit StructTypes for every test table (no inference).
 - ``catalog``    — parquet table loader / temp-view registration.
 - ``sources``    — reference-dialect CSV source/sink (SURVEY.md §1.4).

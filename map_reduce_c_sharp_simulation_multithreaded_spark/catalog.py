@@ -25,12 +25,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts has shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
-        # across corpus generations. Nanos would be rejected by Spark's
-        # vectorized reader, so the legacy conf reads them as long and a
-        # floor-convert lands on the engine-native microsecond TimestampType
-        # (matching DuckDB's ns→µs floor); micros read natively as NTZ and
-        # only need the cast to session-TZ (UTC) TimestampType.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # across corpus generations. Nanos read as long (session.SESSION_CONF)
+        # and floor-convert to the engine-native µs TimestampType (DuckDB's
+        # ns→µs floor); micros read natively as NTZ and only need the cast
+        # to session-TZ (UTC) TimestampType.
         df = spark.read.parquet(path)
         if isinstance(df.schema["ts"].dataType, LongType):
             return df.withColumn(

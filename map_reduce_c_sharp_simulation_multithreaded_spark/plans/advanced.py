@@ -11,6 +11,7 @@ joins — each step a bounded shuffle, no driver-side graph state.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 
 import pandas as pd
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 from ..buildstats import memo_build
 from ..catalog import load_table, load_tables
 from ..operators.text import winnow_fp_pairs
-from ..session import pin_session
+from ..session import conf_scope
 from .registry import register
 
 
@@ -45,7 +46,6 @@ def pandas_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks the Arrow path: grouping, batch in/out schema, float math.
     ddof=1 matches STDDEV_SAMP.
     """
-    pin_session(spark)
     c = load_table(spark, sf_dir, "customer")
 
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -91,7 +91,6 @@ def pandas_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the bucket's rows, and user skew inside a bucket is
     bounded by the same per-user row counts the per-user form had.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     n_buckets = 64
     bucket = F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).alias("bucket")
@@ -173,7 +172,6 @@ def range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy, not per-user event count. The oracle is the naive theta
     join — small enough at test scale.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     width = 300_000_000  # 5 minutes in microseconds
     base = ev.select(
@@ -280,7 +278,6 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-backed — dedup_minhash_lsh runs the md5-derived oracle-mode
     hash family, so even its banding is replayed by DuckDB.)
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     labels = _fp_cluster_labels(d, sf_dir, band=None)
     return labels.select(
@@ -496,7 +493,6 @@ def curation_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax window — differentially testing the COMPOSITION end to end
     (414 clusters / 33 multi-doc at the sf0.01 driver gate).
     """
-    pin_session(spark)
     from ..operators.text import quality_features
 
     d = load_table(spark, sf_dir, "documents")
@@ -578,7 +574,6 @@ def split_cluster_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end. Leakage-freedom (no cluster straddles the splits) is
     pinned in tests/test_round7_ops.py.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     labels = _rare_fp_cluster_labels(d, sf_dir)
     nibble = F.substring(
@@ -626,8 +621,6 @@ def udtf_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     hatch when the per-row fan-out body is genuinely imperative.
     """
     from pyspark.sql.functions import udtf
-
-    pin_session(spark)
 
     @udtf(returnType="doc_id bigint, chunk_idx int, n_words int, n_chars int")
     class ChunkWindows:
@@ -681,22 +674,10 @@ def _loop_partitions(spark, n: int | None):
     (events_stream.run_to_completion): at 100 TB you RAISE it until a
     node-frame partition fits executor memory — the point is that the
     loop's width is an explicit decision tracking node count, not an
-    inherited scan setting."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _ctx():
-        if n is None:
-            yield
-            return
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return _ctx()
+    inherited scan setting. ``n=None`` leaves the session as it is."""
+    if n is None:
+        return contextlib.nullcontext()
+    return conf_scope(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def pagerank(
@@ -945,7 +926,6 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     redistribution is what keeps the distribution a distribution
     (ranks sum to exactly 1; pinned in tests). Top 20 by rounded rank.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "orders")
     li, o = t["lineitem"], t["orders"]
     edges = (
@@ -983,7 +963,6 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagates min-labels to a fixpoint, PageRank redistributes mass a
     fixed number of rounds with lineage checkpointing.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "orders")
     li, o = t["lineitem"], t["orders"]
     cs = (
@@ -1098,7 +1077,6 @@ def graph_bfs_supplier_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     construct Spark has no primitive for — checked against the
     iterative frontier loop, hop cap 6 on both sides.
     """
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     from pyspark.sql import Window
 
@@ -1157,7 +1135,6 @@ def pandas_udaf_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     you'd pre-reduce with builtin partial aggs instead (the pattern
     every other aggregate here uses).
     """
-    pin_session(spark)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -1206,7 +1183,6 @@ def pysource_synthetic_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's split-files + per-worker reader
     (``D/Program.cs:63-149,346-372``) as a formal API.
     """
-    pin_session(spark)
     from ..sources.python_source import register_synthetic_source
 
     register_synthetic_source(spark)

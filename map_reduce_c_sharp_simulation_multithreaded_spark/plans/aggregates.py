@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
 from ..functions.numeric import exact_decimal_sum
-from ..session import pin_session
 from .registry import register
 
 
@@ -74,7 +73,6 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     only 7 of 11 columns are read — the declarative form of the
     reference's hand-coded projection (``D/Program.cs:421-427``).
     """
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     g = (
@@ -139,7 +137,6 @@ GROUP BY l_returnflag
 )
 def agg_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct aggregation (expand + two-phase agg under the hood)."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_suppkey").alias("n_suppliers"),
@@ -182,7 +179,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     and in production you run only the sketch pass anyway (the exact
     pass exists here as the in-query accuracy audit).
     """
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     exact = li.groupBy("l_returnflag").agg(
         F.count_distinct("l_suppkey").alias("exact_suppliers"),
@@ -217,7 +213,6 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two keys: all 2^2 grouping sets in one pass."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -238,7 +233,6 @@ GROUP BY ROLLUP (CAST(year(o_orderdate) AS INT), o_orderstatus)
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (year, status): hierarchical subtotals + grand total."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.withColumn("order_year", F.year("o_orderdate"))
@@ -262,7 +256,6 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL surface (temp views)."""
-    pin_session(spark)
     register_views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -288,7 +281,6 @@ GROUP BY l_returnflag
 def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot linestatus into columns (explicit value list, so the plan
     needs no extra distinct-values pass — required at scale)."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -345,7 +337,6 @@ def agg_stats_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     x² has exactly 4 decimals and |x²| < 2^49/1e4, so ROUND(x·x, 4)
     recovers the exact product before the decimal sum.
     """
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     g = (
@@ -410,7 +401,6 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the array-typed variant stays covered in
     ``tests/test_oracle_parity.py::test_collect_sorted_array``.
     """
-    pin_session(spark)
     n = load_table(spark, sf_dir, "nation")
     return n.groupBy("n_regionkey").agg(
         F.array_join(F.sort_array(F.collect_list("n_name")), "|").alias(
@@ -443,7 +433,6 @@ def agg_median_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear interpolation for continuous percentiles), emitted as
     ×1000 integers — see the oracle comment for why a 2-decimal
     ROUND is an exact tie here by construction."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.round(F.median("o_totalprice") * 1000, 0).cast("long").alias("median_e3"),
@@ -474,7 +463,6 @@ def agg_salted_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit salt is for hot keys whose partials still overflow one
     reducer — kept deterministic here via hash-salting, no rand().)
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     salted = ev.withColumn("_salt", F.pmod(F.hash("event_id"), F.lit(16)))
     partial = salted.groupBy("event_type", "_salt").agg(
@@ -509,7 +497,6 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolated percentile path is hash-checked in
     agg_median_percentile.)
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     agg = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -560,7 +547,6 @@ def agg_histogram_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition to ≤12 rows before the exchange). Boundary values land
     in the upper bin on both engines: floor of identical doubles.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     p = F.col("o_totalprice")
     bucket = (
@@ -614,7 +600,6 @@ def agg_profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     table instead of one per column is the difference between usable
     and not.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     prof = o.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -663,7 +648,6 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles: one for the count, one for the per-group rank; the
     second operates on the already-reduced group table).
     """
-    pin_session(spark)
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
@@ -723,7 +707,6 @@ def agg_stats_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     also the single-pass map-side-combinable shape you'd want at
     100 TB — one scan, six partial aggregates, no second pass.
     """
-    pin_session(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     j = (
@@ -781,7 +764,6 @@ def agg_cube_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-pass expand-aggregate plan as ``agg_cube``; the indicator
     is metadata Catalyst carries through the expansion for free.
     """
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("int").alias("g_flag"),

@@ -25,7 +25,6 @@ from ..operators.dedup import (
     simhash64,
 )
 from ..operators.text import tokens, word_shingles
-from ..session import pin_session
 from .registry import register
 
 
@@ -44,7 +43,6 @@ def dedup_exact_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-groupBy on sha2(text) — shuffle keys are 32 bytes regardless of
     document size, the scale-correct exact-dedup shape.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return exact_dedup_keep_first(d, "text", "doc_id")
 
@@ -91,7 +89,6 @@ FROM scored
 def dedup_ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard between adjacent doc ids — the exact
     similarity kernel that MinHash approximates, oracle-checked."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     # persisted: both sides of the adjacent-id join derive from this
     # frame, so unpersisted the tokenize→shingle pipeline plans and
@@ -181,7 +178,6 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning is lossless, so Spark's pruned answer must hash-match
     DuckDB's exhaustive one.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     sh = d.select(
         "doc_id",
@@ -293,7 +289,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the xxhash64 production family is the operator default and stays
     pytest-pinned. Output is integer-scaled jaccard_e4 (tie-proof).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return minhash_lsh_dedup_pairs(
         d, "doc_id", "text", shingle_k=3, num_hashes=32, bands=8,
@@ -345,7 +340,6 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT.md r4 missing #1). Production stays 64-bit xxhash64 via
     the operator default, planted-duplicate pytest-pinned.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return simhash64(d, "doc_id", "text", hash_mode="md5")
 
@@ -414,7 +408,6 @@ def dedup_span_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join, zero sorts; the md5 shuffle key is 32 hex chars
     however long the span is.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", tokens(F.col("text")).alias("tk"))
     n_win = F.floor(F.size("tk") / 10).cast("int")
@@ -484,7 +477,6 @@ def dedup_simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures, banding, the bucketed self-join, and the popcount
     verify (VERDICT.md r4 missing #1).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return simhash_band_pairs(
         d, "doc_id", "text", max_hamming=3, n_bands=4, hash_mode="md5"
@@ -547,7 +539,6 @@ def dedup_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement here also witnesses that the prune+verify funnel equals
     the one-step exact computation.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return exact_substr_spans(
         d, id_col="doc_id", text_col="text", min_len=_XS_L
@@ -630,7 +621,6 @@ def dedup_cut_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the span detector's plan; the oracle replays detection AND
     surgery from literal grams end to end.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     spans = exact_substr_spans(
         d, id_col="doc_id", text_col="text", min_len=_XS_L

@@ -15,7 +15,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..session import pin_session
 from .registry import register
 
 _7D_US = 7 * 86_400 * 1_000_000
@@ -67,7 +66,6 @@ def events_funnel_view_click_purchase(
     the three stages co-partition (one real exchange, reused), and the
     stage filters push into the scan.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     v = (
@@ -135,7 +133,6 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two user-keyed aggregations plus one distinct count; every value
     an exact integer.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     wk = F.floor(
         (F.unix_micros(F.col("ts")) / F.lit(86_400_000_000.0) - _DAY0)
@@ -195,7 +192,6 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile() lands exact; the true values are multiples of 0.1,
     so 4-decimal rounding absorbs the artifact and cannot tie.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     v = (
@@ -253,7 +249,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the events table carries nanos the engines floor differently —
     integer-µs + id ordering is the only stable sequence).
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
@@ -308,7 +303,6 @@ def events_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion factor is the window length, not the data size. Days
     are anchored integers (no calendar truncation).
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     day = (
         F.floor(F.unix_micros(F.col("ts")) / F.lit(86_400_000_000.0)).cast(
@@ -367,7 +361,6 @@ def events_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     window passes over the same user_id partitioning — Catalyst reuses
     one shuffle for both.
     """
-    pin_session(spark)
     from pyspark.sql import Window as W
 
     ev = load_table(spark, sf_dir, "events")
@@ -425,7 +418,6 @@ def events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond ids throughout (module discipline); DIV chains agree
     with a direct day DIV because all epochs are positive.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     cents = (
         F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100)
@@ -556,7 +548,6 @@ def events_session_funnel_attribution(
     decimals; events_rollup_cascade discipline) so the double appears
     only in the final cast — nothing association-order-dependent.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id", "event_id", "event_type", "value",

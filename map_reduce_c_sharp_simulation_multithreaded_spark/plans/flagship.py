@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..functions.numeric import exact_decimal_sum
 from ..operators.joins import dedup_dim_last_wins
-from ..session import pin_session
 from .registry import register
 
 FLAGSHIP_ORACLE = """
@@ -50,7 +49,6 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference composition O1–O12 (scan → co-partitioned equi hash
     join → partial+final SUM agg) generalized to a 3-join star query.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "orders", "customer", "nation")
     li, o, c, n = t["lineitem"], t["orders"], t["customer"], t["nation"]
     return (
@@ -89,7 +87,6 @@ def parity_donations_by_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the join (or zero when the dim broadcasts), one for the final
     agg; map-side partial aggregation is automatic.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "orders", "customer")
     o, c = t["orders"], t["customer"]
     return (
@@ -117,7 +114,6 @@ def parity_null_default_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``D/Program.cs:451,580-588``); here the same semantics as an
     explicit ``coalesce`` so NULL rows still count toward COUNT(*).
     """
-    pin_session(spark)
     ev = load_tables(spark, sf_dir, "events")["events"]
     return ev.groupBy("event_type").agg(
         F.round(F.sum(F.coalesce(F.col("value"), F.lit(0.0))), 2).alias("total_value"),
@@ -158,7 +154,6 @@ def parity_last_wins_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     since distributed file order is not) over ``orders`` treated as a
     keyed dimension, then the ordinary join.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "orders", "customer")
     o, c = t["orders"], t["customer"]
     latest = dedup_dim_last_wins(
@@ -197,7 +192,6 @@ def parity_decimal_money_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle comparison needs NO rounding at all — the strongest parity
     statement in the suite.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "orders", "customer")
     o, c = t["orders"], t["customer"]
     return (

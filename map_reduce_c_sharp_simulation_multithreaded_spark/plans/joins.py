@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..session import pin_session
 from .registry import register
 
 
@@ -33,7 +32,6 @@ FROM supplier JOIN nation ON s_nationkey = n_nationkey
 )
 def join_inner_supplier_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plain inner equi join with projection (the reference's O8–O9)."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "supplier", "nation")
     s, n = t["supplier"], t["nation"]
     return s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
@@ -54,7 +52,6 @@ GROUP BY c_custkey
 )
 def join_left_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join preserving customers with no orders (count=0)."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders")
     c, o = t["customer"], t["orders"]
     return (
@@ -81,7 +78,6 @@ GROUP BY c_nationkey
 )
 def join_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join = EXISTS; no row multiplication on the probe side."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders")
     c, o = t["customer"], t["orders"]
     return (
@@ -114,7 +110,6 @@ def join_anti_customers_without_big_orders(
     right side to big-ticket orders first — the filter is pushed to the
     parquet scan before the anti join's shuffle.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders")
     c = t["customer"]
     big = t["orders"].filter(F.col("o_totalprice") > 400000)
@@ -139,7 +134,6 @@ FROM cn FULL OUTER JOIN sn ON ck = sk
 )
 def join_full_outer_nation_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join: nations present on either side, with flags."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "supplier")
     cn = t["customer"].select(F.col("c_nationkey").alias("ck")).distinct()
     sn = t["supplier"].select(F.col("s_nationkey").alias("sk")).distinct()
@@ -157,7 +151,6 @@ def join_full_outer_nation_coverage(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def join_cross_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product (both sides tiny/fixed-cardinality)."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "region", "nation")
     return t["region"].crossJoin(t["nation"]).select("r_name", "n_name")
 
@@ -182,7 +175,6 @@ def join_nonequi_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape that survives 100 TB (a pure theta join would be a broadcast
     nested loop).
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "orders")
     li, o = t["lineitem"], t["orders"]
     cond = (li.l_orderkey == o.o_orderkey) & (
@@ -218,7 +210,6 @@ def join_broadcast_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     broadcast hint is safe at 100 TB and removes two shuffles; customer
     is left to Catalyst/AQE (broadcastable at sf0.1, shuffled at scale).
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "orders", "customer", "nation", "region")
     o, c, n, r = t["orders"], t["customer"], t["nation"], t["region"]
     return (
@@ -251,7 +242,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition skew join can't balance (operators/joins.py salted_join).
     The oracle is the UNSALTED join: salting must not change results.
     """
-    pin_session(spark)
     from ..operators.joins import salted_join
 
     t = load_tables(spark, sf_dir, "orders", "customer")
@@ -296,7 +286,6 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     dialects agree for any corpus, not just the current one where every
     p_name has a space.
     """
-    pin_session(spark)
     p = load_tables(spark, sf_dir, "part")["part"]
     names = p.select(F.col("p_name").alias("nm")).distinct()
     block = lambda c: F.coalesce(  # noqa: E731

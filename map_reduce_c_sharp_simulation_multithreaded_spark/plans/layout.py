@@ -13,7 +13,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..session import pin_session
 from .registry import register
 
 _BITS = 16
@@ -75,7 +74,6 @@ def layout_zorder_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives every bit). Write-path usage is just
     ``df.repartitionByRange(n, zkey).sortWithinPartitions(zkey)``.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
         (F.col("o_custkey") % 65536).cast("long").alias("x"),

@@ -24,7 +24,6 @@ from ..operators.dedup import (
     minhash_signatures,
 )
 from ..operators.text import tokens, word_shingles
-from ..session import pin_session
 from .dedup import _JACCARD_VERIFY_CTE, _MINHASH_CTES
 from .registry import register
 
@@ -61,7 +60,6 @@ def split_train_test_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves. A leakage-safe variant hashes the dedup-cluster key instead
     of the raw text.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     nibble = F.substring(F.md5(F.col("text")), 1, 1)
     split = F.when(
@@ -114,7 +112,6 @@ def pack_sequences_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     given the (lang, doc_id) order. Bins can overflow by at most one
     document — the standard trade for a fully parallel packer.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     w = (
@@ -194,7 +191,6 @@ def contamination_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the full audit table (clean docs carry zeros), not just
     the flagged tail.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     grams = F.array_distinct(word_shingles(tokens(F.col("text")), 13))
     # Collision bound (ADVICE.md r4): joining on a single 64-bit digest
@@ -292,7 +288,6 @@ def contamination_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed signature stage cannot drift between the two oracles);
     xxhash64 stays the production default in the underlying operators.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return _fuzzy_contam_audit(d)
 
@@ -387,7 +382,6 @@ def quantize_embeddings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs are either integers (code_sum, n_extreme) or order-free
     maxima rounded well past the double noise floor.
     """
-    pin_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id",
@@ -495,7 +489,6 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the canonical row rides the min struct, so the hot key combines
     map-side and there is no join back at all; same answer.
     """
-    pin_session(spark)
     from ..operators.text import fingerprint, tokens
 
     d = load_table(spark, sf_dir, "documents")
@@ -605,7 +598,6 @@ def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (order-free across 1000 executors); the final normalize
     folds 64 values in position order.
     """
-    pin_session(spark)
     dim = 64
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -695,7 +687,6 @@ def dedup_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     which composes from this same plan; per-source skew here is
     bounded by the corpus's source fan-out.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     key = F.md5(F.concat(F.lit("quota:"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("source").orderBy(key.asc(), F.col("doc_id").asc())
@@ -773,7 +764,6 @@ def dedup_source_quota_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     straggler task; here that domain's rank work spreads over 32 shard
     partitions and phase 2 touches at most 15·32 rows per source.
     """
-    pin_session(spark)
     return source_quota_two_phase(
         load_table(spark, sf_dir, "documents"), n=15, n_shards=32
     )
@@ -837,7 +827,6 @@ def pack_sequences_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the accepted trade for removing the per-key straggler — the same
     two-phase discipline as ``source_quota_two_phase``.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     shard = (
@@ -921,7 +910,6 @@ def curation_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     caveat). One scan, one vocab-free aggregation — the token count
     is a per-row array expression.
     """
-    pin_session(spark)
     from ..operators.text import token_count
 
     d = load_table(spark, sf_dir, "documents")
@@ -1000,7 +988,6 @@ def contamination_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal hashes). The oracle replays the one-step literal semantics,
     so agreement also witnesses funnel ≡ direct computation.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     is_eval = F.col("doc_id") % 20 == 7
     return contamination_spans(
@@ -1087,7 +1074,6 @@ def curation_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs/tokens, checksum), not the kept rows — a pipeline would keep
     the per-doc flag column instead of aggregating.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
@@ -1221,7 +1207,6 @@ def contamination_cut_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays detection and surgery end to end from literal
     grams.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     is_eval = F.col("doc_id") % 20 == 7
     train, eval_df = d.filter(~is_eval), d.filter(is_eval)

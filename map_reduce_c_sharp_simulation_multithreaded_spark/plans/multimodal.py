@@ -16,7 +16,6 @@ from ..operators.multimodal import (
     attach_binary_payload,
     extract_features,
 )
-from ..session import pin_session
 from .registry import register
 
 
@@ -34,7 +33,6 @@ FROM documents
 def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over binary payloads: byte length, content hash,
     leading byte — all computed on the ``binary`` column JVM-side."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "utf-8")
     return d.select(
@@ -61,7 +59,6 @@ def arrow_batch_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring occurrence count — all vectorized pyarrow.compute
     kernels on RecordBatches, no pandas conversion. Deterministic, so
     it carries a full oracle (unlike the decode stub)."""
-    pin_session(spark)
     return arrow_doc_stats(load_table(spark, sf_dir, "documents"))
 
 
@@ -89,7 +86,6 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly from the hex digest — a full cross-engine oracle over a
     mapInPandas path (the UDF is the implementation, not the
     contract)."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     with_payload = attach_binary_payload(d, "text", "doc_id")
     return extract_features(with_payload)
@@ -122,7 +118,6 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-level resample is the import-gated step, the PLAN is the
     tested contract (positive operands, so DuckDB's flooring // and
     Python's // agree)."""
-    pin_session(spark)
     from ..operators.multimodal import resize_plan
 
     d = load_table(spark, sf_dir, "documents")
@@ -153,7 +148,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame digest is md5 over the exact char slice — both engines hash
     the same utf-8 bytes of the same substring, so the oracle covers
     the fan-out, the sampling stride, and the ragged tail frame."""
-    pin_session(spark)
     from ..operators.multimodal import frame_sample
 
     d = load_table(spark, sf_dir, "documents")
@@ -220,7 +214,6 @@ def multimodal_pipeline_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle covers the full pipeline end to end (positive operands:
     DuckDB's flooring ``//`` and Spark's ``floor`` agree).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     feats = extract_features(attach_binary_payload(d, "text", "doc_id"))
     longer = F.greatest("width", "height")

@@ -16,14 +16,22 @@ Queries with ``oracle=None`` would get only a rows-materialize check;
 whose SQL depends on the data (e.g. a trained-codebook ANN query: the
 codebook floats are re-derived at oracle time and rendered as
 literals). ``resolve_oracle`` turns either form into a plain string.
+
+``register`` pins the session: the function it stores and returns runs
+``session.pin_session`` before the plan is built, so every query sees
+the engine's posture (UTC, AQE, shuffle width) on a session it did not
+create, whether it is called through the registry or imported directly.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import pin_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 OracleSpec = "str | Callable[[str], str] | None"
@@ -53,13 +61,19 @@ def register(
     tags: tuple[str, ...] = (),
     headline: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a query under ``name``."""
+    """Decorator: register a query under ``name`` and return it pinned."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = Query(name, fn, oracle, tuple(tags), headline)
-        return fn
+
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            pin_session(spark)
+            return fn(spark, sf_dir)
+
+        _REGISTRY[name] = Query(name, pinned, oracle, tuple(tags), headline)
+        return pinned
 
     return deco
 

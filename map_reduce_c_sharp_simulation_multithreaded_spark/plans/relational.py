@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
-from ..session import pin_session
 from .registry import register
 
 
@@ -33,7 +32,6 @@ WHERE o_totalprice BETWEEN 100000 AND 300000
 def filter_predicate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """between / isin / like / negation — full boolean predicate algebra
     pushed into the parquet scan where possible."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.filter(
         F.col("o_totalprice").between(100000, 300000)
@@ -54,7 +52,6 @@ WHERE regexp_matches(p_name, '^(small|large) (widget|bolt)$')
 )
 def filter_rlike_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex predicate (rlike)."""
-    pin_session(spark)
     p = load_table(spark, sf_dir, "part")
     return p.filter(
         F.col("p_name").rlike(r"^(small|large) (widget|bolt)$")
@@ -81,7 +78,6 @@ def filter_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL = NULL matches, unlike ordinary equi-join semantics. The
     corpus has no NULL values, so NULLs are derived deterministically
     (value < 10 → NULL) to exercise the NULL-match path for real."""
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     v = F.when(F.col("value") < 10, F.lit(None).cast("double")).otherwise(
         F.round("value", 0)
@@ -110,7 +106,6 @@ def subquery_scalar_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 1.8x margin keeps the cut line far from any data point, so the
     engines' ulp-level AVG difference cannot flip membership.
     """
-    pin_session(spark)
     register_views(spark, sf_dir, "orders")
     return spark.sql(_SCALAR_SUBQ)
 
@@ -130,7 +125,6 @@ def subquery_correlated_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (decorrelated by Catalyst into an
     aggregate + join — no per-row re-execution at scale); the +500
     margin keeps membership ulp-stable."""
-    pin_session(spark)
     register_views(spark, sf_dir, "customer")
     return spark.sql(_CORR_SUBQ)
 
@@ -146,7 +140,6 @@ SELECT p_partkey, 'retailprice' AS attr, p_retailprice AS val FROM part
 )
 def unpivot_part_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): wide columns → (attr, val) rows via stack."""
-    pin_session(spark)
     p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -173,7 +166,6 @@ JOIN (
 )
 def join_composite_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-key equi join (argmax via self-join on two columns)."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     last_line = li.groupBy("l_orderkey").agg(
         F.max("l_linenumber").alias("l_linenumber")
@@ -197,7 +189,6 @@ HAVING COUNT(*) > 50 AND SUM(l_quantity) > 1000.5
 )
 def having_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation filter (HAVING)."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_suppkey")
@@ -253,7 +244,6 @@ def quality_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's throw-on-missing-key probe (``D/Program.cs:310``)
     into a reporting operator instead of a crash.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     li = load_table(spark, sf_dir, "lineitem")
@@ -332,7 +322,6 @@ def join_lateral_top_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     worker loop). Price tiebreak on o_orderkey keeps the winner
     deterministic across engines.
     """
-    pin_session(spark)
     register_views(spark, sf_dir, "customer", "orders")
     return spark.sql("""
         SELECT c_custkey, t.o_orderkey AS top_orderkey,

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..session import pin_session
 from .registry import register
 
 
@@ -42,7 +41,6 @@ FROM part
 )
 def scalar_string_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lower/upper/substring/length/concat/regexp_extract/replace/split/trim."""
-    pin_session(spark)
     p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -86,7 +84,6 @@ def scalar_date_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dayofweek`` is Sunday=0, shifted in the oracle). Dates render as
     strings so engine-side date types never leak into the hash.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return o.select(
@@ -126,7 +123,6 @@ FROM lineitem
 def scalar_math_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """abs/floor/ceil/sqrt/ln/log10/power/mod/sign (ints → BIGINT both
     sides, transcendentals rounded to kill libm ulp drift)."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice")
     return li.select(
@@ -160,7 +156,6 @@ FROM orders
 )
 def scalar_conditional_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN / nullif / coalesce / least / greatest."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     tp = F.col("o_totalprice")
     return o.select(
@@ -197,7 +192,6 @@ FROM embeddings
 def scalar_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """size/element_at/aggregate(fold)/array_max/array_contains on the
     native ``array<float>`` embedding column (multimodal data model)."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
     return e.select(
@@ -228,7 +222,6 @@ FROM events
 )
 def scalar_json_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction over the events.props text column."""
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -251,7 +244,6 @@ def scalar_map_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType construction + explode to attribute rows (the oracle
     builds the same rows relationally — DuckDB MAPs are not compared
     directly)."""
-    pin_session(spark)
     n = load_table(spark, sf_dir, "nation")
     m = F.create_map(
         F.lit("name"),
@@ -279,7 +271,6 @@ FROM (
 )
 def scalar_posexplode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode (UDTF-style fan-out) of tokenized part names."""
-    pin_session(spark)
     p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -310,7 +301,6 @@ def scalar_higher_order_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same precision; ROUND(,3) matches the established vector-sum
     discipline.
     """
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
     return e.select(
@@ -355,7 +345,6 @@ def scalar_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's native TRY_CAST; the float-string cast goes through an
     explicit VARCHAR render so both engines parse the same text.
     """
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_linenumber") == 1).select(
         "l_orderkey",

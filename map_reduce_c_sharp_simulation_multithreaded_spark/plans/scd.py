@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..catalog import load_tables
-from ..session import pin_session
 from .registry import register
 
 _SCD2_ORACLE = """
@@ -78,7 +77,6 @@ def scd2_merge_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     = anti-join survivors ∪ closed versions ∪ opened versions — three
     narrow selects over two shuffles; nothing is collected.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders")
     c, o = t["customer"], t["orders"]
 

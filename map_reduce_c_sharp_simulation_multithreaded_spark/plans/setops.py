@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..session import pin_session
 from .registry import register
 
 
@@ -37,7 +36,6 @@ SELECT s_nationkey FROM supplier
 )
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct): union + dropDuplicates, one shuffle."""
-    pin_session(spark)
     c, s = _nationkeys(spark, sf_dir)
     return c.union(s).distinct()
 
@@ -58,7 +56,6 @@ GROUP BY nationkey
 def set_union_all_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL + re-aggregate — the reference's merge step
     (``D/Program.cs:151-165``) as a declarative plan."""
-    pin_session(spark)
     c, s = _nationkeys(spark, sf_dir)
     return c.union(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
 
@@ -74,7 +71,6 @@ SELECT s_nationkey FROM supplier
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct)."""
-    pin_session(spark)
     c, s = _nationkeys(spark, sf_dir)
     return c.intersect(s)
 
@@ -94,7 +90,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``subtract`` is Spark's EXCEPT DISTINCT (``exceptAll`` would be bag
     semantics: remove one occurrence per right row — not this query).
     """
-    pin_session(spark)
     c, s = _nationkeys(spark, sf_dir)
     return c.subtract(s)
 
@@ -106,7 +101,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicates on a column subset (exact dedup primitive)."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_returnflag", "l_linestatus").dropDuplicates()
 
@@ -125,7 +119,6 @@ def orderby_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: ORDER BY + LIMIT plans as TakeOrderedAndProject —
     per-partition heaps + driver merge of k rows, never a full sort.
     The tiebreak makes the k-boundary deterministic."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -147,7 +140,6 @@ def sort_within_partitions_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     """repartition-by-key + sortWithinPartitions (the write-path pattern
     for sorted sinks / bucketed tables) feeding an aggregate; results
     are order-insensitive so the oracle is the plain aggregate."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     arranged = li.repartition(8, "l_returnflag").sortWithinPartitions(
         "l_returnflag", "l_orderkey"
@@ -170,7 +162,6 @@ SELECT l_returnflag FROM lineitem WHERE l_linenumber = 1
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL (bag semantics): each right-side occurrence removes
     exactly one left-side occurrence."""
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_linenumber") <= 2).select("l_returnflag")
     b = li.filter(F.col("l_linenumber") == 1).select("l_returnflag")
@@ -199,7 +190,6 @@ def sample_deterministic_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism-within-Spark is pinned separately in pytest; its RNG is
     engine-specific by construction.)
     """
-    pin_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     u60 = F.conv(
         F.substring(
@@ -243,7 +233,6 @@ def sample_stratified_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     RNG, and any engine re-derives the identical sample — the 100 TB
     reproducibility discipline, proven by the DuckDB oracle.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     # 2^58 (=0.25·2^60) and 3·2^58 (=0.75·2^60): exact integer bars
     bar = F.when(
@@ -292,7 +281,6 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys are rounded to 9 BEFORE the top-k cut with a doc_id tiebreak
     so a last-ulp ln() difference cannot flip the boundary.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     u60 = F.conv(
         F.substring(

@@ -32,7 +32,6 @@ from ..operators.similarity import (
     sq8_topk,
     train_kmeans_codebook,
 )
-from ..session import pin_session
 from .registry import register
 
 # Relational cosine for the oracle: elementwise product in doubles,
@@ -96,7 +95,6 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate side once, window-rank per query. The LSH variant below
     is the same API at 100 TB candidate scale.
     """
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return brute_force_topk(
         e.filter(F.col("vec_id") < 20), e, "vec_id", "embedding", k=5
@@ -120,7 +118,6 @@ WHERE {_cos_sql('a.embedding', 'b.embedding')} >= 0.35
 def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (sim ≥ 0.35 among the
     first 200 vectors) — the embedding-space analogue of MinHash dedup."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
@@ -221,7 +218,6 @@ def sim_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets). The planes are sha256-derived literals (no RNG state), so
     the buckets are reproducible across runs AND engines — the oracle
     recomputes the identical histogram from the same plane literals."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return (
         e.select(hyperplane_bucket(F.col("embedding"), 12, 64).alias("bucket"))
@@ -330,7 +326,6 @@ def sim_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank — the inverted-file alternative to the LSH path: candidates
     partition into argmax-centroid cells, queries probe their best
     cells, so the scan shrinks to ~nprobe/ncells of the corpus."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -352,7 +347,6 @@ def sim_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are sha256-derived literals, so the candidate generation is fully
     reproducible in SQL; see :func:`_lsh_ann_oracle`. Recall vs brute
     force stays pinned in pytest."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return lsh_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -481,7 +475,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the memory story at 100 TB (the scored set ships codes, not
     vectors). Codebooks are sha256-derived literals, so the DuckDB
     oracle re-derives encodes, tables, and ranking exactly."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -533,7 +526,6 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The codebook is built once per dataset through :func:`memo_build`.
     """
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     cents = memo_build(
         "kmeans_codebook", "sim_ivf_trained_topk k=8", sf_dir,
@@ -599,7 +591,6 @@ def embed_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment (see cross-engine float rules in the registry
     docstring).
     """
-    pin_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
@@ -702,7 +693,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan. Similarity is rounded to 6 before thresholding on both
     engines so association-order ulps can't flip a verdict.
     """
-    pin_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return semantic_clusters(emb, n_centroids=16)
 
@@ -834,7 +824,6 @@ def dedup_semantic_clusters_scaled(
     distributed and the generated DuckDB oracle re-derives the same k
     from the same files.
     """
-    pin_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return semantic_clusters(emb, n_centroids=_semdedup_scaled_k(sf_dir))
 
@@ -910,7 +899,6 @@ def dedup_semantic_clusters_trained(
     ``tools/semdedup_scaling.py --trained`` prints the trained-vs-sha
     row (SCALE.md round-7 table).
     """
-    pin_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _trained_semdedup_codebook(emb, sf_dir)
     return semantic_clusters(
@@ -957,7 +945,6 @@ def sim_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query. Recovers most of PQ's quantization loss while reading
     full precision for k'/N of the corpus; the oracle nests the
     generated IVF-PQ SQL and reranks identically."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return ivfpq_rerank_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -1008,7 +995,6 @@ def sim_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two existing generated SQLs, so every stage is re-derived
     independently end to end.
     """
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 20)
     truth = brute_force_topk(q, e, "vec_id", "embedding", k=5).select(
@@ -1208,7 +1194,6 @@ def sim_ann_recall_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/ann_probe_curve.py sweeps it: 0.81 → 1.0). Scale shape is
     unchanged from the recall@k debut: ground truth bounded by the
     broadcast 20-query sample, candidates pruned cell-wise."""
-    pin_session(spark)
     return planted_recall(spark, sf_dir, k=10, n_probe=4)
 
 
@@ -1255,7 +1240,6 @@ def sim_range_search_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality and probe-monotonicity are pytest-pinned; the oracle
     replays corpus construction, cell pruning, and the threshold cut
     end to end."""
-    pin_session(spark)
     # the derived corpus feeds three plan branches (candidate side,
     # probe side, both rerank vector fetches): cache it so the
     # per-row 64-element array construction runs once, not per branch
@@ -1337,7 +1321,6 @@ def sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a replan. On the planted corpus the trained books lift
     compressed-domain recall above the sha plateau (pytest-pinned;
     ANN_CURVE.json carries the measured frontier)."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -1429,7 +1412,6 @@ def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora carry within-cell structure, which is why FAISS defaults
     to residual encoding. The floor-vs-sha lift is pinned in pytest;
     ANN_CURVE.json carries the full frontier."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -1503,7 +1485,6 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     under floor(x+0.5) rounding (same contract as
     quantize_embeddings_int8), so the full oracle re-derives
     quantization, compressed scoring, shortlist, and rerank in SQL."""
-    pin_session(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return sq8_topk(
         e, e.filter(F.col("vec_id") < 20), "vec_id", "embedding",

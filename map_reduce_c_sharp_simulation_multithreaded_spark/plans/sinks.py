@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 from ..catalog import load_table
-from ..session import pin_session
 from .registry import register
 
 
@@ -69,7 +68,6 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir, so the query is idempotent under driver re-runs and safe
     against a concurrent process on the same sf.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     out = partitioned_roundtrip_dir(sf_dir)
     d.write.mode("overwrite").partitionBy("lang").parquet(out)
@@ -104,7 +102,6 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text. The reference knows only CSV (``D/Program.cs:475-504``);
     this is the second interchange format a user migrating from it
     gets for free from the engine."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 100 == 0
     )
@@ -149,7 +146,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucketed path even where AQE would broadcast at test scale;
     the database rides in an explicit /tmp LOCATION so the query is
     independent of the session's warehouse directory."""
-    pin_session(spark)
     tag = _scratch_tag(sf_dir).replace(".", "_")
     db = f"mrcs_bkt_{tag}"
     loc = os.path.join(tempfile.gettempdir(), f"mrss_bucket_wh_{tag}")
@@ -229,7 +225,6 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted table, proving the round trip, not just the in-plan
     anti-join.
     """
-    pin_session(spark)
     import shutil
 
     from ..operators.text import fingerprint
@@ -288,7 +283,6 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as the other sinks; columnar-format parity matters
     because at 100 TB a migrating user's lake is rarely one format.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 97 == 0
     )

@@ -11,12 +11,15 @@ same way.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import pin_session
+from ..catalog import load_table
 from ..streaming.events_stream import events_stream, run_to_completion
 from .registry import register
 
@@ -40,7 +43,6 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete-mode memory sink: after full replay the result equals the
     batch bucket aggregation, which is exactly what the oracle computes.
     """
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "10 minutes")
@@ -89,7 +91,6 @@ def stream_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     they agree only because every window's cents sum is non-negative —
     an invariant of the corpus (events.value >= 0) now audited by
     quality_constraint_audit's ``events_nonneg_value`` check."""
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     # integer-exact average: the 2-decimal window sum becomes integer
     # cents (round-then-cast — double→long CAST truncates in Spark and
@@ -150,7 +151,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     state machine must merge to exactly those sessions after full
     replay; session start compared as integer microseconds.
     """
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "30 minutes")
@@ -173,7 +173,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates on (user_id, event_type): first-seen
     emission; after full replay the kept set equals batch DISTINCT."""
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     dedup = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
@@ -246,7 +245,6 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multi-batch replay covered by
     ``tests/test_contract.py::test_stateful_totals_multibatch``).
     """
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     out = run_to_completion(stateful_user_totals(ev), spark, "update")
     return last_update_per_user(out)
@@ -273,9 +271,6 @@ def stream_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB dim scale). After full replay the result equals the batch
     join+agg, which is the oracle.
     """
-    from ..catalog import load_table
-
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     customer = load_table(spark, sf_dir, "customer")
     agg = (
@@ -309,7 +304,6 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     requirement for unbounded-stream joins at scale. After full replay
     the inner join equals the batch interval join (the oracle).
     """
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     errors = (
         ev.filter(F.col("event_type") == "error")
@@ -361,12 +355,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     reprocessing a batch rewrites the same version instead of
     double-counting.
     """
-    import os
-    import tempfile
-
-    from ..catalog import load_table
-
-    pin_session(spark)
     tmp = tempfile.mkdtemp(prefix="mrcs_fb_")
     src_dir = os.path.join(tmp, "src")
     load_table(spark, sf_dir, "events").select(
@@ -438,7 +426,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     is exactly the input (the oracle) while the plan still runs the
     bounded-state dedup operator.
     """
-    pin_session(spark)
     ev = events_stream(spark, sf_dir)
     dedup = (
         ev.withWatermark("ts", "30 minutes")
@@ -481,7 +468,6 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-maintained aggregate table. Deterministic event_type
     tiebreak on the rank boundary.
     """
-    pin_session(spark)
     from pyspark.sql import Window
 
     ev = events_stream(spark, sf_dir)

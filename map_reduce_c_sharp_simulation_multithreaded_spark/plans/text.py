@@ -36,7 +36,6 @@ from ..operators.text import (
     winnow_fp_summary,
     word_shingles,
 )
-from ..session import pin_session
 from .registry import register
 
 
@@ -54,7 +53,6 @@ FROM documents
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (whitespace tokenizer) + char-length audit."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -94,7 +92,6 @@ def text_lang_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     immune to the double-rounding ulp drift that failed the round-2
     driver hash (VERDICT.md "What's wrong" #1).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -143,7 +140,6 @@ def text_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang column is incidental — the differential test pins the operator
     semantics, not linguistic truth.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -176,7 +172,6 @@ FROM (
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality features: punctuation ratio, stopword ratio, mean token
     length — the length/punct/stopword scoring family."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     feats = quality_features(F.col("text"))
     return d.select(
@@ -208,7 +203,6 @@ def text_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     The canonical MapReduce word-count — the reference's architecture
     generalized (map-side combine + reduce merge, automatic in Spark).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
@@ -238,7 +232,6 @@ FROM documents
 def text_char_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-trigram counts (total + distinct) per document —
     the shingling primitive under MinHash/SimHash."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     # r14: the trigram totals/distincts are counted in one vectorized
     # numpy pass (operators.text.char_ngram_stats_rows — grams encoded
@@ -262,7 +255,6 @@ GROUP BY 1
 def text_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization-fingerprint groups (md5 of canonicalized text) —
     document fingerprinting for dedup."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
@@ -289,7 +281,6 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-style pre-tokenizer counting: a GPT-2-ish regex splits text
     into word/number/punctuation subword units (the cheap token-count
     estimator for LLM data budgeting — no vocab needed)."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     pat = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+"
     return d.select(
@@ -410,7 +401,6 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_gopher_pass_col` (shared with curation_dsir_importance,
     whose target distribution is exactly this gate's pass set).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     m = _gopher_m(d)
     return m.select(
@@ -500,7 +490,6 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_perplexity_filter one), so the per-doc aggregation is an
     order-free integer sum.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     # tokenize ONCE: the verdict's array folds and the bigram explode
     # both read this cached frame — one corpus scan, one tokenization
@@ -612,7 +601,6 @@ def text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical output on both engines. All JVM-side regexps; at
     100 TB this is one codegen'd projection, no shuffle at all.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     t = F.concat(
@@ -735,7 +723,6 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc as (count, min, checksum). All array expressions, zero
     shuffles before the final projection.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     # The polynomial is plain int64 arithmetic, so the vectorized Arrow
     # fold computes the IDENTICAL integers (operators.text.
@@ -806,7 +793,6 @@ def sketch_countmin_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; merging shards is counter addition (the map-side-combine
     shape Spark already gives the groupBy).
     """
-    pin_session(spark)
     p, width = 1000003, 64
     d = load_table(spark, sf_dir, "documents")
     occ = d.select(
@@ -902,7 +888,6 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     two engines' ln() cannot flip a rank (the inputs to ln are exact
     small-integer ratios, identical on both sides).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     # r14: the (doc, term) counts fold per doc in Python over the
     # JVM-tokenized arrays (operators.text.term_counts_rows) — rows
@@ -981,7 +966,6 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     every pair occurrence to the vocab²-bounded c2 rows; the c1 join
     side is vocabulary-sized → broadcast.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     tk = tokens(F.lower(F.col("text")))
     t = d.select(tk.alias("tk")).filter(F.size("tk") >= 2)
@@ -1074,7 +1058,6 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab²-bounded count rows. Marginals are vocabulary-sized →
     broadcast; the corpus total rides a broadcast cross join.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     tk = tokens(F.lower(F.col("text")))
     t = d.select(tk.alias("tk")).filter(F.size("tk") >= 2)
@@ -1184,7 +1167,6 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer can hash them (arrays are unhashable — the
     agg_collect_sorted lesson).
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     # r15 (guide §4.2 / §2.3): the (tok, doc_id, tf) table comes from
     # term_counts_rows — the per-doc Counter fold that took tfidf's
@@ -1272,7 +1254,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     invisible at ROUND 6); top-50 membership is deterministic via the
     (freq DESC, tok) tiebreak.
     """
-    pin_session(spark)
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
@@ -1402,7 +1383,6 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the driver. The oracle replays all three rounds in SQL
     with an islands formulation of the same greedy matching.
     """
-    pin_session(spark)
     from ..operators.text import bpe_initial_words, bpe_merge_rounds
 
     d = load_table(spark, sf_dir, "documents")
@@ -1446,7 +1426,6 @@ def text_bpe_vocab_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency rollup is one explode + two-phase agg. The oracle reuses
     the merge-round CTE chain; its final words CTE IS the applied
     vocabulary."""
-    pin_session(spark)
     from ..operators.text import bpe_initial_words, bpe_merge_rounds
 
     d = load_table(spark, sf_dir, "documents")
@@ -1517,7 +1496,6 @@ def quality_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-bigram stream on (w1, w2); every doc bigram exists in the
     corpus LM by construction, so the join is lossless and p is never
     zero."""
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     tk = tokens(F.lower(F.col("text")))
     t = d.select("doc_id", tk.alias("tk")).filter(F.size("tk") >= 2)
@@ -1705,7 +1683,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps, no full sort, no
     single-partition window over the corpus); ties break on doc_id.
     """
-    pin_session(spark)
     d = load_table(spark, sf_dir, "documents")
     scored = _bm25_scored(d)
     top = scored.orderBy(F.col("score").desc(), "doc_id").limit(10)
@@ -1794,7 +1771,6 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/(60+rank) doubles, rounded before the final cut; all ties break
     on doc_id.
     """
-    pin_session(spark)
     from ..operators.similarity import dot, l2_norm
 
     d = load_table(spark, sf_dir, "documents")

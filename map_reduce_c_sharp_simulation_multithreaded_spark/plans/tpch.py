@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions.numeric import exact_decimal_sum, exact_decimal_sum_sql
-from ..session import pin_session
 from .registry import register
 
 def _rev():
@@ -55,7 +54,6 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both date filters push into the parquet scans; the segment filter
     prunes customer before the join (visible as PushedFilters).
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
     c, o, li = t["customer"], t["orders"], t["lineitem"]
     return (
@@ -96,7 +94,6 @@ GROUP BY n_name
 def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 shape: 6-table snowflake with a composite join condition
     (customer and supplier in the SAME nation) and region pruning."""
-    pin_session(spark)
     t = load_tables(
         spark, sf_dir, "customer", "orders", "lineitem", "supplier",
         "nation", "region",
@@ -146,7 +143,6 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ranking happens on the ROUNDED revenue (same on both engines) with
     c_custkey tiebreak → the LIMIT boundary is deterministic.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders", "lineitem", "nation")
     c, o, li, n = t["customer"], t["orders"], t["lineitem"], t["nation"]
     return (
@@ -190,7 +186,6 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 shape: semi-join against a HAVING-filtered aggregate (large
     orders), then re-aggregate with customer context. The threshold sits
     off any exactly-representable quantity sum (150.5)."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
     c, o, li = t["customer"], t["orders"], t["lineitem"]
     big = (
@@ -236,7 +231,6 @@ def tpch_q12_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     The lateness predicate is timestamp arithmetic evaluated inside the
     partial aggregate; the shuffle carries 5 groups, not 6M rows.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "orders", "lineitem")
     o, li = t["orders"], t["lineitem"]
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 75 DAYS")
@@ -281,7 +275,6 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     round are reproducible cross-engine. part is broadcast-joined into
     the lineitem scan; the date filter pushes to parquet.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "part")
     li, p = t["lineitem"], t["part"]
     promo_term = F.when(F.col("p_type") == "PROMO", _rev()).otherwise(F.lit(0.0))
@@ -324,7 +317,6 @@ def tpch_q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     spanning both join sides — the classic test that OR predicates
     still prune (Catalyst extracts the common l_quantity/p_brand/p_size
     envelope below the join; part is broadcast)."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "part")
     li, p = t["lineitem"], t["part"]
     q = F.col("l_quantity")
@@ -383,7 +375,6 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a cross-role disjunction, then revenue by year. Exercises
     self-aliasing a broadcast dim and OR-predicates spanning both
     aliases."""
-    pin_session(spark)
     t = load_tables(
         spark, sf_dir, "supplier", "lineitem", "orders", "customer", "nation"
     )
@@ -435,7 +426,6 @@ def tpch_q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     stands in as the part↔supplier bridge): DISTINCT supplier count per
     (brand, type). Distinct aggregation = two-phase expand+dedup before
     the final count; the size filter prunes the part scan."""
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "part", "lineitem")
     p, li = t["part"], t["lineitem"]
     return (
@@ -498,7 +488,6 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagree there), so the min and the equality join compare exact
     decimals, not float ulps, in both engines.
     """
-    pin_session(spark)
     t = load_tables(
         spark, sf_dir, "lineitem", "part", "supplier", "nation", "region"
     )
@@ -587,7 +576,6 @@ def tpch_q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outer IN becomes a LEFT SEMI join onto supplier. Quantities sum
     as DECIMAL so the 2x-vs-total comparison is exact cross-engine.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "supplier", "nation", "lineitem", "part")
     s, n, li, p = t["supplier"], t["nation"], t["lineitem"], t["part"]
     qty = F.col("l_quantity").cast("decimal(18,2)")
@@ -642,7 +630,6 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: the reference engine has no subquery support at all
     (one fixed aggregation, ``D/Program.cs:300-340``).
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "orders", "lineitem")
     o, li = t["orders"], t["lineitem"]
     o_f = o.filter(
@@ -678,7 +665,6 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     all four), one partial/final agg pair with no groupBy keys. The
     canonical "is your scan path fast" probe.
     """
-    pin_session(spark)
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"]
     return (
         li.filter(
@@ -735,7 +721,6 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division, so the ratio is bit-identical across engines and
     ROUND(...,6) cannot tie.
     """
-    pin_session(spark)
     t = load_tables(
         spark, sf_dir, "lineitem", "orders", "part", "customer",
         "nation", "supplier", "region",
@@ -804,7 +789,6 @@ def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     is a priority class instead of the NOT LIKE comment pattern.)
     Two stacked aggregations over one outer join.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders")
     c, o = t["customer"], t["orders"]
     cond = (c.c_custkey == o.o_custkey) & (
@@ -846,7 +830,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (supplier_no) before the self-referencing join, avoiding Spark's
     trivially-true-predicate resolution trap on reused plans.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "supplier")
     li, s = t["lineitem"], t["supplier"]
     revenue = (
@@ -891,7 +874,6 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     The /7.0 output can never tie at ROUND(...,2): m/7 with three
     decimals would need 2m ≡ 7·odd, impossible in integers.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "part")
     li, p = t["lineitem"], t["part"]
     qa = li.groupBy(F.col("l_partkey").alias("ap_partkey")).agg(
@@ -946,7 +928,6 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti join's lateness test references l1's order date — carried
     through the semi join as a join-condition column, not recomputed.
     """
-    pin_session(spark)
     t = load_tables(
         spark, sf_dir, "lineitem", "orders", "supplier", "nation", "region"
     )
@@ -1026,7 +1007,6 @@ def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataF
     gives every customer at least one order). The scalar rides a
     broadcast cross join, not a collect.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "customer", "orders")
     c, o = t["customer"], t["orders"]
     bal_sum = F.sum(
@@ -1086,7 +1066,6 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: generalizes the single hash join + SUM at
     ``D/Program.cs:301-318`` to a multi-dimension star.
     """
-    pin_session(spark)
     t = load_tables(
         spark, sf_dir, "lineitem", "part", "supplier", "orders", "nation"
     )
@@ -1148,7 +1127,6 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the pv aggregate shuffles once on l_partkey and the
     total is a single-row broadcast — no driver collect.
     """
-    pin_session(spark)
     t = load_tables(spark, sf_dir, "lineitem", "supplier", "nation")
     li, s, n = t["lineitem"], t["supplier"], t["nation"]
     pv = (

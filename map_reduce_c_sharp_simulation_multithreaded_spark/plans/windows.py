@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..session import pin_session
 from .registry import register
 
 
@@ -48,7 +47,6 @@ def window_topk_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on the partition key; at 100 TB this is the standard
     top-k-per-group shape (row_number + filter), never a global sort.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -75,7 +73,6 @@ FROM orders
 )
 def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running sum per customer over order history (rows frame)."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
@@ -102,7 +99,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offset functions (no arithmetic → raw doubles must match exactly)."""
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
@@ -133,7 +129,6 @@ FROM (
 def window_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank/dense_rank over a tie-prone key; ntile over a total order
     (ntile on a partial order would be nondeterministic)."""
-    pin_session(spark)
     c = load_table(spark, sf_dir, "customer")
     b = c.select(
         "c_custkey",
@@ -171,7 +166,6 @@ def window_range_frame_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Value-based frames need a numeric order key; epoch seconds here.
     Deterministic even under order-key ties (frame depends on values).
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
@@ -199,7 +193,6 @@ WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)
 )
 def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value/last_value with an explicit full frame for last."""
-    pin_session(spark)
     c = load_table(spark, sf_dir, "customer")
     w = W.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
     w_full = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -233,7 +226,6 @@ def asof_join_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     The side tag sorts purchases before errors at equal timestamps so
     "at-or-before" includes ties, matching ASOF's ``>=``.
     """
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
@@ -295,7 +287,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: 30-minute-gap sessions per user via
     lag → gap flag → cumulative sum (the standard distributed shape;
     one shuffle, no stateful loop)."""
-    pin_session(spark)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     w_cum = W.partitionBy("user_id").orderBy("ts").rowsBetween(
@@ -343,7 +334,6 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     The frame membership itself is deterministic via the
     (o_orderdate, o_orderkey) tiebreak.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey").rowsBetween(-3, 0)
     arr = F.sort_array(F.collect_list("o_totalprice").over(w))
@@ -381,7 +371,6 @@ def window_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation revenues, so both engines divide identical doubles;
     ROUND(,6) absorbs the final division ulp.
     """
-    pin_session(spark)
     from ..functions.numeric import exact_decimal_sum
 
     t = load_table(spark, sf_dir, "customer").join(
@@ -421,7 +410,6 @@ def window_distinct_count_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential test of the workaround. Both windows share one
     shuffle on o_custkey.
     """
-    pin_session(spark)
     o = load_table(spark, sf_dir, "orders")
     dr = F.dense_rank().over(
         W.partitionBy("o_custkey").orderBy("o_orderpriority")

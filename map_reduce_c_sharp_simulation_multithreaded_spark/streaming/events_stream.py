@@ -11,10 +11,13 @@ would run against Kafka at scale; only the source line changes.
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import conf_scope
 
 _COUNTER = itertools.count()
 
@@ -27,9 +30,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     -only) batch read of the same file and ts normalized per dtype,
     exactly as in ``catalog.load_table``.
     """
-    import os
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     physical = spark.read.parquet(
         os.path.join(sf_dir, "events.parquet")
     ).schema
@@ -68,17 +68,15 @@ def run_to_completion(
     the batch setting.
     """
     name = f"mrcs_stream_{next(_COUNTER)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
+    ):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     try:
         q.processAllAvailable()
     finally:

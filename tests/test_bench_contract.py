@@ -3,7 +3,8 @@
 ``session.default_cpus`` is the one CPU-grant default: bench.py reports
 it as "cpus", ``get_spark`` builds ``local[N]`` from it, and
 ``pin_session`` sizes a foreign session's stock shuffle partitions from
-it.
+it. ``registry.register`` pins the session for every query, whether it
+is called through the registry or imported from its plan module.
 """
 
 from __future__ import annotations
@@ -44,3 +45,32 @@ def test_pin_session_sizes_stock_partitions_from_the_grant(
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_registered_queries_pin_a_foreign_session(spark, sf_dir):
+    """A session at a foreign timezone and the stock 200 partitions
+    reads UTC at the grant's width after one query, called through the
+    registry or imported directly; ``conf_scope`` restores the suite's
+    settings afterwards."""
+    from map_reduce_c_sharp_simulation_multithreaded_spark.plans.aggregates import (
+        agg_pricing_summary,
+    )
+    from map_reduce_c_sharp_simulation_multithreaded_spark.plans.registry import (
+        all_queries,
+    )
+    from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
+        conf_scope,
+        default_cpus,
+    )
+
+    foreign = {
+        "spark.sql.session.timeZone": "America/New_York",
+        "spark.sql.shuffle.partitions": "200",
+    }
+    for fn in (all_queries()["agg_pricing_summary"].fn, agg_pricing_summary):
+        with conf_scope(spark, foreign):
+            fn(spark, sf_dir)
+            assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+            assert int(spark.conf.get("spark.sql.shuffle.partitions")) == max(
+                default_cpus(), 16
+            )

@@ -23,6 +23,7 @@ from map_reduce_c_sharp_simulation_multithreaded_spark.plans.streaming import (
 from map_reduce_c_sharp_simulation_multithreaded_spark.plans.text import (
     text_inverted_index,
 )
+from map_reduce_c_sharp_simulation_multithreaded_spark.session import conf_scope
 
 
 def test_bfs_hops_on_known_graph(spark):
@@ -262,23 +263,14 @@ def test_runtime_bloom_filter_engages(spark, sf_dir):
     side into the fact scan — row-level semi-join pushdown that cuts
     shuffle input before the SortMergeJoin. Thresholds are lowered to
     sf-test sizes; conf state is restored for the shared session."""
-    keys = (
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold",
-    )
-    saved = {}
-    for k in keys:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    try:
-        spark.conf.set(keys[0], "true")
-        spark.conf.set(keys[1], "10MB")
-        spark.conf.set(keys[2], "1KB")
-        spark.conf.set(keys[3], "-1")
+    overrides = {
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    before = {k: spark.conf.get(k, None) for k in overrides}
+    with conf_scope(spark, overrides):
         li = load_table(spark, sf_dir, "lineitem")
         p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
         j = li.join(p, li.l_partkey == p.p_partkey).groupBy("p_brand").count()
@@ -287,9 +279,5 @@ def test_runtime_bloom_filter_engages(spark, sf_dir):
         # and the filtered result is still correct
         rows = j.collect()
         assert len(rows) == 1 and rows[0]["count"] > 0
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    # keys that were unset are unset again, set ones hold their values
+    assert {k: spark.conf.get(k, None) for k in overrides} == before

@@ -17,7 +17,10 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.plans import registry
-from map_reduce_c_sharp_simulation_multithreaded_spark.session import get_spark
+from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
+    conf_scope,
+    get_spark,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 KEEP = re.compile(
@@ -156,25 +159,17 @@ def forced_smj_section(spark) -> list[str]:
     the FINAL adaptive plan (isFinalPlan=true) after execution — the
     join strategy AQE actually chose at runtime, not the static guess.
     """
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        )
+    overrides = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        # sf0.1 shuffle partitions are a few hundred KB; these force the
+        # largest ones over the skew bar so the split path executes
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": (
+            "131072"
+        ),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "65536",
     }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    # sf0.1 shuffle partitions are a few hundred KB; these force the
-    # largest ones over the skew bar so the split path executes
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "131072"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
 
     out = [
         "## Forced sort-merge-join section (100 TB fact⋈fact simulation)",
@@ -188,29 +183,27 @@ def forced_smj_section(spark) -> list[str]:
         "relies on.",
         "",
     ]
-    for name in (
-        "flagship_revenue_by_nation",
-        "tpch_q18_large_orders",
-        "join_composite_key",
-    ):
-        q = registry.all_queries()[name]
-        df = q.fn(spark, SF_DIR)
-        df.collect()  # drive AQE to the final plan
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
+    with conf_scope(spark, overrides):
+        for name in (
+            "flagship_revenue_by_nation",
+            "tpch_q18_large_orders",
+            "join_composite_key",
+        ):
+            q = registry.all_queries()[name]
+            df = q.fn(spark, SF_DIR)
+            df.collect()  # drive AQE to the final plan
+            plan = df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
             )
-        )
-        lines = [ln for ln in plan.splitlines() if SMJ_KEEP.search(ln.strip())]
-        out += [f"### {name} (forced SMJ)", "", "```"]
-        out += [ln.strip()[:140] for ln in lines]
-        out += ["```", ""]
-    out += skew_split_demo(spark)
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
+            lines = [
+                ln for ln in plan.splitlines() if SMJ_KEEP.search(ln.strip())
+            ]
+            out += [f"### {name} (forced SMJ)", "", "```"]
+            out += [ln.strip()[:140] for ln in lines]
+            out += ["```", ""]
+        out += skew_split_demo(spark)
     return out
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.catalog import load_table
 from map_reduce_c_sharp_simulation_multithreaded_spark.session import (
+    conf_scope,
     get_spark,
 )
 
@@ -193,27 +194,17 @@ ROCKSDB_PROVIDER = (
 def run_one(spark, chunk_dir: str, name: str, build, provider=None) -> dict:
     ev = chunked_stream(spark, chunk_dir)
     frame, mode = build(ev)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov_key, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    overrides = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
     if provider:
-        spark.conf.set(prov_key, provider)
-    t0 = time.perf_counter()
-    try:
+        overrides["spark.sql.streaming.stateStore.providerClass"] = provider
+    with conf_scope(spark, overrides):
+        t0 = time.perf_counter()
         q = (
             frame.writeStream.outputMode(mode)
             .format("memory")
             .queryName(f"mrcs_sbench_{name}")
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        if provider:
-            if old_prov:
-                spark.conf.set(prov_key, old_prov)
-            else:
-                spark.conf.unset(prov_key)
     try:
         q.processAllAvailable()
         wall = time.perf_counter() - t0
