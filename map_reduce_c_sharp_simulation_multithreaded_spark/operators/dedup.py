@@ -6,8 +6,9 @@ Scale design (the whole point at 100 TB):
   ``D/Program.cs:51``, the one anti-pattern not to copy);
 * MinHash+LSH turns O(n²) near-dup search into
   shingle→signature→band→bucket-join — every step a bounded shuffle;
-* SimHash gives a 64-bit per-doc signature (hamming-ball near-dup);
-* all hashing is ``xxhash64`` (deterministic across runs/executors).
+* SimHash gives a 60-bit per-doc signature (hamming-ball near-dup);
+* shingle and token hashing is :func:`md5hash60`, which DuckDB
+  replays bit-for-bit, so every near-dup query carries an oracle.
 """
 
 from __future__ import annotations
@@ -32,13 +33,11 @@ _MERSENNE = (1 << 31) - 1
 def md5hash60(col: Column) -> Column:
     """Engine-replayable 60-bit hash: first 15 md5 hex chars as a long.
 
-    The ORACLE-MODE hash family (VERDICT.md r4 "What's missing" #1):
-    ``xxhash64`` stays the production default — faster and 64-bit — but
-    no non-Spark engine recomputes it, so queries that want a DuckDB
-    differential oracle swap in this family. DuckDB replays it exactly
-    (via the version-stable hex polynomial in ``plans.dedup.
-    _md5hash60_sql``; equivalently ``('0x' || substr(md5(x), 1,
-    15))::BIGINT`` on recent DuckDB — both pinned equal in pytest);
+    The one shingle/token hash family of the near-dup operators, chosen
+    over ``xxhash64`` because DuckDB replays it exactly (via the
+    version-stable hex polynomial in ``plans.dedup._md5hash60_sql``;
+    equivalently ``('0x' || substr(md5(x), 1, 15))::BIGINT`` on recent
+    DuckDB — both pinned equal in pytest);
     15 hex chars = 60 bits keeps the value positive in a signed 64-bit
     long on both engines. Both engines hash the same utf-8 bytes, so
     values agree bit-for-bit.
@@ -46,17 +45,8 @@ def md5hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _token_hash(col: Column, hash_mode: str) -> Column:
-    if hash_mode == "md5":
-        return md5hash60(col)
-    assert hash_mode == "xxhash64", hash_mode
-    return F.xxhash64(col)
-
-
-def _sig_bits(hash_mode: str) -> int:
-    """Signature width per hash family: 64 production bits, 60 in
-    oracle mode (md5-derived hashes carry 60 usable bits)."""
-    return 60 if hash_mode == "md5" else 64
+# SimHash signature width: md5hash60 values carry 60 usable bits
+_SIG_BITS = 60
 
 
 def exact_dedup_keep_first(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -77,20 +67,19 @@ def exact_dedup_keep_first(df: DataFrame, text_col: str, id_col: str) -> DataFra
 
 
 def doc_shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3,
-    hash_mode: str = "xxhash64",
+    df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """Per-doc DISTINCT shingle-hash SET as an array column.
 
     Shingling, hashing, and dedup are all per-row array expressions —
     zero shuffles. Docs too short for a single shingle are dropped
     (they cannot be shingle-near-dups, and at scale they would
-    otherwise all collide into one degenerate LSH bucket).
-    ``hash_mode="md5"`` selects the engine-replayable 60-bit family
-    (see :func:`md5hash60`) so the whole pipeline gets a DuckDB oracle.
+    otherwise all collide into one degenerate LSH bucket). Shingles
+    hash with :func:`md5hash60`, so the whole pipeline gets a DuckDB
+    oracle.
     """
     sh = word_shingles(tokens(F.col(text_col)), k)
-    hashes = F.array_distinct(F.transform(sh, lambda s: _token_hash(s, hash_mode)))
+    hashes = F.array_distinct(F.transform(sh, md5hash60))
     return df.select(F.col(id_col), hashes.alias("sh_set")).filter(
         F.size("sh_set") > 0
     )
@@ -136,33 +125,29 @@ def minhash_signatures(
 
 
 def lsh_banded(
-    signatures: DataFrame, id_col: str, bands: int = 8, rows: int = 4,
-    hash_mode: str = "xxhash64",
+    signatures: DataFrame, id_col: str, bands: int = 8, rows: int = 4
 ) -> DataFrame:
     """Banded LSH keys, one row per (doc, band): ``(id, band_id, bh)``.
 
     The shared banding stage under both the self-join candidate
     generator (:func:`lsh_candidate_pairs`) and the bipartite
     train×eval decontamination join (plans.mlprep.
-    contamination_fuzzy_minhash). In oracle mode the band key is the
-    comma-joined slice itself (exact, engine-replayable); production
-    hashes the slice with xxhash64 so shuffle keys stay 8 bytes.
+    contamination_fuzzy_minhash). The band key is the comma-joined
+    slice itself (exact, engine-replayable).
     """
-
-    def band_key(slice_col: Column) -> Column:
-        if hash_mode == "md5":
-            return F.concat_ws(
-                ",", F.transform(slice_col, lambda v: v.cast("string"))
-            )
-        return F.xxhash64(slice_col)
-
     # band b's key over its contiguous signature slice — data-driven
     # over the sig array (see minhash_signatures)
     bands_expr = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(
             b.alias("band_id"),
-            band_key(F.slice(F.col("sig"), b * rows + 1, rows)).alias("bh"),
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.slice(F.col("sig"), b * rows + 1, rows),
+                    lambda v: v.cast("string"),
+                ),
+            ).alias("bh"),
         ),
     )
     return signatures.select(
@@ -171,16 +156,15 @@ def lsh_banded(
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str, bands: int = 8, rows: int = 4,
-    hash_mode: str = "xxhash64",
+    signatures: DataFrame, id_col: str, bands: int = 8, rows: int = 4
 ) -> DataFrame:
-    """Band the signature and self-join per (band, band_hash) bucket.
+    """Band the signature and self-join per (band, band key) bucket.
 
     Docs agreeing on all ``rows`` values of any band become a candidate
-    pair; the join key is (band_id, hash of the band slice) so bucket
-    size — not n² — bounds the work.
+    pair; the join key is (band_id, band slice) so bucket size — not
+    n² — bounds the work.
     """
-    banded = lsh_banded(signatures, id_col, bands, rows, hash_mode)
+    banded = lsh_banded(signatures, id_col, bands, rows)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -198,8 +182,7 @@ def lsh_candidate_pairs(
 
 
 def exact_jaccard(
-    pairs: DataFrame, shingle_sets: DataFrame, id_col: str,
-    scaled: bool = False,
+    pairs: DataFrame, shingle_sets: DataFrame, id_col: str
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (verification step).
 
@@ -207,33 +190,25 @@ def exact_jaccard(
     row, then intersection/union are per-row array expressions — no
     per-shingle shuffle, work proportional to candidate pairs only.
 
-    ``scaled=True`` emits integer ``jaccard_e4 = n_inter*10000 DIV
-    n_union`` instead of a rounded double: n_union is frequently a
-    power of two, so ROUND(n_inter/n_union, 4) lands on exact .5 ties
-    (1/32 = 0.03125) where engine rounding modes diverge — integer
-    floor division cannot tie (the dedup_ngram_jaccard_adjacent
-    lesson, applied here for the oracle-backed query).
+    Emits integer ``jaccard_e4 = n_inter*10000 DIV n_union``, not a
+    rounded double: n_union is frequently a power of two, so
+    ROUND(n_inter/n_union, 4) lands on exact .5 ties (1/32 = 0.03125)
+    where engine rounding modes diverge — integer floor division cannot
+    tie (the dedup_ngram_jaccard_adjacent lesson).
     """
     sa = shingle_sets.select(F.col(id_col).alias("id_a"), F.col("sh_set").alias("_sa"))
     sb = shingle_sets.select(F.col(id_col).alias("id_b"), F.col("sh_set").alias("_sb"))
     n_inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
     n_union = F.size("_sa") + F.size("_sb") - n_inter
-    joined = pairs.join(sa, "id_a").join(sb, "id_b")
-    if scaled:
-        return joined.select(
-            "id_a",
-            "id_b",
-            n_inter.alias("n_inter"),
-            n_union.alias("n_union"),
-        ).select(
-            "id_a",
-            "id_b",
-            F.expr("n_inter * 10000L DIV n_union").alias("jaccard_e4"),
-        )
-    return joined.select(
+    return pairs.join(sa, "id_a").join(sb, "id_b").select(
         "id_a",
         "id_b",
-        F.round(n_inter.cast("double") / n_union, 4).alias("jaccard"),
+        n_inter.alias("n_inter"),
+        n_union.alias("n_union"),
+    ).select(
+        "id_a",
+        "id_b",
+        F.expr("n_inter * 10000L DIV n_union").alias("jaccard_e4"),
     )
 
 
@@ -245,8 +220,6 @@ def minhash_lsh_dedup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    hash_mode: str = "xxhash64",
-    scaled: bool = False,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH buckets →
     candidate pairs → exact-Jaccard verify → threshold filter.
@@ -262,19 +235,13 @@ def minhash_lsh_dedup_pairs(
     branch dominated runtime before caching. At cluster scale the same
     persist would go to MEMORY_AND_DISK serialized.
     """
-    sets_df = doc_shingle_sets(df, id_col, text_col, shingle_k, hash_mode).cache()
+    sets_df = doc_shingle_sets(df, id_col, text_col, shingle_k).cache()
     sig = minhash_signatures(sets_df.select(id_col, "sh_set"), id_col, num_hashes)
     sig = sig.drop("sh_set").cache()
-    cand = lsh_candidate_pairs(
-        sig, id_col, bands, num_hashes // bands, hash_mode
-    )
-    verified = exact_jaccard(cand, sets_df, id_col, scaled=scaled)
-    if scaled:
-        # floor(10000·j) >= 10000·t  <=>  j >= t when 10000·t is integer
-        return verified.filter(
-            F.col("jaccard_e4") >= int(round(threshold * 10000))
-        )
-    return verified.filter(F.col("jaccard") >= threshold)
+    cand = lsh_candidate_pairs(sig, id_col, bands, num_hashes // bands)
+    verified = exact_jaccard(cand, sets_df, id_col)
+    # floor(10000·j) >= 10000·t  <=>  j >= t when 10000·t is integer
+    return verified.filter(F.col("jaccard_e4") >= int(round(threshold * 10000)))
 
 
 def jaccard_prefix_join_pairs(
@@ -419,15 +386,16 @@ def jaccard_prefix_join_pairs(
     )
 
 
-def _simhash_md5_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash) for the md5 oracle mode, vectorized: token arrays
-    are produced by the JVM ``tokens()`` (no tokenizer-semantics risk)
-    and cross to Python unchanged; per doc, each token occurrence's
-    :func:`md5hash60` (``md5hash60_py`` reproduces it bit-for-bit)
-    votes ±1 per bit, and the sign bits reassemble into the identical
-    long the 60-way aggregate computed. Docs with zero tokens emit no
-    row, exactly like the explode+groupBy form."""
-    bit_idx = np.arange(60, dtype=np.uint64)
+def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """SimHash per doc: per-token hash, majority vote per bit.
+
+    Token arrays are produced by the JVM ``tokens()`` (no
+    tokenizer-semantics risk) and cross to Python unchanged; per doc,
+    each token occurrence's :func:`md5hash60` (``md5hash60_py``
+    reproduces it bit-for-bit) votes ±1 per bit, and the sign bits
+    reassemble into a 60-bit long that DuckDB replays. Docs with zero
+    tokens emit no row."""
+    bit_idx = np.arange(_SIG_BITS, dtype=np.uint64)
 
     def simhash(tk):
         if not tk:
@@ -445,48 +413,6 @@ def _simhash_md5_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def simhash64(
-    df: DataFrame, id_col: str, text_col: str, hash_mode: str = "xxhash64"
-) -> DataFrame:
-    """SimHash per doc: per-token hash, majority vote per bit.
-
-    One explode + one n_bits-way aggregation (sums of ±1 per bit), then
-    the sign bits reassemble into a long — two shuffles total, no
-    row-wise UDFs. Production signatures are 64-bit xxhash64;
-    ``hash_mode="md5"`` switches to the 60-bit engine-replayable family
-    (:func:`md5hash60`) so the signature query carries a full DuckDB
-    oracle and runs the vectorized :func:`_simhash_md5_rows` path
-    (identical longs: ``md5hash60_py`` reproduces md5hash60, the vote
-    is the same ±1 sum)."""
-    if hash_mode == "md5":
-        return _simhash_md5_rows(df, id_col, text_col)
-    n_bits = _sig_bits(hash_mode)
-    tok = df.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_t")
-    ).select(id_col, _token_hash(F.col("_t"), hash_mode).alias("_h"))
-    bit_sums = tok.groupBy(id_col).agg(
-        *[
-            F.sum(
-                # shift-right+mask instead of a 1<<i mask literal: 1<<63
-                # does not fit a signed long
-                F.when(
-                    F.shiftrightunsigned(F.col("_h"), i).bitwiseAND(F.lit(1)) != 0,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(n_bits)
-        ]
-    )
-    sim = F.lit(0).cast("long")
-    for i in range(n_bits):
-        # bit 63 of a signed long is the sign bit: its set-value is -2^63
-        bit_val = (1 << i) if i < 63 else -(1 << 63)
-        sim = sim + F.when(F.col(f"b{i}") > 0, F.lit(bit_val).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bit_sums.select(F.col(id_col), sim.alias("simhash"))
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit signatures (popcount of XOR)."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -498,10 +424,9 @@ def simhash_band_pairs(
     text_col: str,
     max_hamming: int = 3,
     n_bands: int = 4,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-duplicate PAIRS via pigeonhole banding: split the
-    64-bit signature into ``n_bands`` equal bands; two signatures
+    60-bit signature into ``n_bands`` equal bands; two signatures
     within ``max_hamming`` bit flips (< n_bands) must agree exactly on
     at least one band, so a self-join keyed on (band_id, band_value)
     finds every such pair with 100% recall — candidate generation is a
@@ -514,14 +439,14 @@ def simhash_band_pairs(
     under AQE like any hot join key.
 
     The signature frame is persisted: both sides of the self-join
-    derive from it, and unpersisted the whole tokenize→hash→60-way
-    vote pipeline plans and runs TWICE (measured: the join costs 2.1 s
+    derive from it, and unpersisted the whole tokenize→hash→vote
+    pipeline plans and runs TWICE (measured: the join costs 2.1 s
     over the 0.26 s signature pass at sf0.1, almost all duplicated
     signature work). Same branch-reuse discipline as minhash.
     """
     assert n_bands > max_hamming, "pigeonhole needs bands > max_hamming"
-    width = _sig_bits(hash_mode) // n_bands
-    sig = simhash64(df, id_col, text_col, hash_mode).cache()
+    width = _SIG_BITS // n_bands
+    sig = simhash64(df, id_col, text_col).cache()
     bands = sig.select(
         F.col(id_col),
         F.col("simhash"),

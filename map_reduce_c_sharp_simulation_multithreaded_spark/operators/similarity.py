@@ -282,31 +282,28 @@ broadcast join since round 8. 256×64 = 16 384 literals is comfortably
 inside codegen limits; the next schedule step (500+) is not."""
 
 
-def _resolve_assign_mode(
-    n_centroids: int, id_col: str | None, broadcast_assign: bool | None
-) -> bool:
-    """True → broadcast-codebook Lloyd assignment, False → literal.
+_SUM_GRID = 1e-6
+"""Grid every per-(cell, position) codebook sum snaps to, in the Spark
+trainers and their pure-Python replays alike: partial-aggregation merge
+order cannot leak ulp drift into a codebook, so training is a
+deterministic function of the (id, vector) multiset (grid-boundary
+caveat: a sum landing within ulps of a half-grid point could round
+apart; same accepted risk as the quantized-NLL oracle in
+plans/text.py)."""
 
-    Validates BEFORE any Spark job runs (ADVICE r8: the old check sat
-    after seed selection, wasting a full scan on an argument error).
-    ``None`` picks by k: literal up to BROADCAST_ASSIGN_CUTOVER_K,
-    broadcast above it (which then REQUIRES id_col — at that k the
-    literal path is the documented wrong plan, so the error tells the
-    caller to supply a key rather than silently degrading;
-    ``broadcast_assign=False`` remains the explicit escape hatch)."""
-    if broadcast_assign is None:
-        broadcast_assign = n_centroids > BROADCAST_ASSIGN_CUTOVER_K
-        if broadcast_assign and id_col is None:
-            raise ValueError(
-                f"n_centroids={n_centroids} exceeds the literal-codebook "
-                f"cutover ({BROADCAST_ASSIGN_CUTOVER_K}); pass id_col so "
-                f"assignment can run as a broadcast join, or force "
-                f"broadcast_assign=False to accept the literal plan"
-            )
-    if broadcast_assign and id_col is None:
-        raise ValueError("broadcast_assign requires id_col (vectors must "
-                         "carry a key the assignment can group on)")
-    return broadcast_assign
+
+def _snap_sum(s: float) -> float:
+    return round(s / _SUM_GRID) * _SUM_GRID
+
+
+def _resolve_assign_mode(n_centroids: int, broadcast: bool | None) -> bool:
+    """True → broadcast-codebook join, False → codebook-literal
+    expression. ``None`` picks by k: literal up to
+    BROADCAST_ASSIGN_CUTOVER_K, broadcast above it; an explicit bool
+    overrides (``False`` is the escape hatch to the literal plan)."""
+    if broadcast is None:
+        return n_centroids > BROADCAST_ASSIGN_CUTOVER_K
+    return broadcast
 
 
 def seed_kmeans_scalable(
@@ -314,14 +311,14 @@ def seed_kmeans_scalable(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     rounds: int = 5,
-    id_col: str | None = None,
+    id_col: str = "vec_id",
     broadcast_score: bool | None = None,
 ) -> list[list[float]]:
     """Deterministic batched farthest-point seeding — the k-means||
     shape (Bahmani et al., VLDB 2012) with the probabilistic
     oversampling draw replaced by a deterministic batched k-center
-    step, so replayable-mode training stays a pure function of the
-    (id, vector) multiset.
+    step, so training stays a pure function of the (id, vector)
+    multiset.
 
     Sequential k-means++/farthest-point seeding needs k DEPENDENT
     passes over the data (each new seed depends on the last) — the
@@ -332,8 +329,9 @@ def seed_kmeans_scalable(
     seed set (per-row expression, no shuffle) and a distributed
     top-4ℓ (TakeOrdered — per-partition heads, never a full sort)
     pulls the vectors farthest from their nearest seed, ties broken
-    by the md5 seed key; REDUCE — a driver-side greedy k-center pass
-    over that ≤4ℓ-row pool picks the ℓ actual seeds, re-scoring
+    by the md5("seed:" || id) key; REDUCE — a driver-side greedy
+    k-center pass over that ≤4ℓ-row pool picks the ℓ actual seeds,
+    re-scoring
     candidates against seeds added WITHIN the batch (the step plain
     batched farthest-point lacks — without it one round spends its
     whole batch on near-duplicate extremes of a single uncovered
@@ -357,9 +355,9 @@ def seed_kmeans_scalable(
     cell, which Lloyd's empty-cell rule already handles. Scoring
     selects its plan by k exactly like the trainer: the centroid-
     literal expression up to BROADCAST_ASSIGN_CUTOVER_K, a broadcast
-    seed-frame join above it (requires ``id_col``; the same max-dot
-    fold, regrouped on the id key), so seeding k=2000 never builds a
-    128 000-literal expression. The driver-side reduction is numpy-
+    seed-frame join above it (the same max-dot fold, regrouped on the
+    id key), so seeding k=2000 never builds a 128 000-literal
+    expression. The driver-side reduction is numpy-
     vectorized (one rank-1 max update per pick), sub-second even at
     the broadcast scales.
 
@@ -376,20 +374,14 @@ def seed_kmeans_scalable(
     input vector, and the duplicate centroid trains into an empty
     cell exactly like the duplicate-vector case above.
 
-    Precondition when ``id_col`` is given: id values must be unique.
-    The broadcast scoring path groups rows by ``_k = md5(id)`` and
-    takes ``F.first(_uv)`` per group, so duplicate ids would silently
-    collapse distinct vectors into one arbitrarily-represented group.
+    Precondition: ``id_col`` values must be unique. The broadcast
+    scoring path groups rows by ``_k = md5(id)`` and takes
+    ``F.first(_uv)`` per group, so duplicate ids would silently collapse
+    distinct vectors into one arbitrarily-represented group.
     """
-    base_cols = [F.col(vec_col).alias("_v")] + (
-        [F.col(id_col).alias("_id")] if id_col is not None else []
-    )
-    if id_col is not None:
-        seed_key = F.md5(F.concat(F.lit("seed:"), F.col("_id").cast("string")))
-    else:
-        seed_key = F.md5(F.to_json(F.struct(F.col("_uv"))).cast("binary"))
+    seed_key = F.md5(F.concat(F.lit("seed:"), F.col("_id").cast("string")))
     vecs = (
-        df.select(*base_cols)
+        df.select(F.col(vec_col).alias("_v"), F.col(id_col).alias("_id"))
         .withColumn("_n", F.greatest(l2_norm(F.col("_v")), F.lit(1e-12)))
         .withColumn(
             "_uv", F.transform("_v", lambda x: x.cast("double") / F.col("_n"))
@@ -406,17 +398,9 @@ def seed_kmeans_scalable(
     # scoring path mirrors the trainer's cutover: the per-row
     # distance-to-seed-set expression embeds every seed as a literal,
     # which past BROADCAST_ASSIGN_CUTOVER_K is the documented wrong
-    # plan — route it through a broadcast seed-frame join instead
-    # (requires the id-keyed _k to regroup the cross-joined rows,
-    # hence id_col, exactly like the trainer's broadcast_assign)
-    if broadcast_score is None:
-        broadcast_score = n_centroids > BROADCAST_ASSIGN_CUTOVER_K
-    if broadcast_score and id_col is None:
-        raise ValueError(
-            f"n_centroids={n_centroids} exceeds the literal-scoring "
-            f"cutover ({BROADCAST_ASSIGN_CUTOVER_K}); pass id_col so "
-            f"seed scoring can run as a broadcast join"
-        )
+    # plan — route it through a broadcast seed-frame join instead,
+    # regrouping the cross-joined rows on the id-keyed _k
+    broadcast_score = _resolve_assign_mode(n_centroids, broadcast_score)
     spark = df.sparkSession
     batch = max(1, -(-(n_centroids - 1) // max(1, rounds)))
     while len(cents) < n_centroids:
@@ -488,8 +472,7 @@ def train_kmeans_codebook(
     n_centroids: int = 16,
     n_iter: int = 5,
     dim: int = 64,
-    id_col: str | None = None,
-    sum_quantize: float | None = None,
+    id_col: str = "vec_id",
     broadcast_assign: bool | None = None,
     init: str = "md5",
 ) -> list[list[float]]:
@@ -504,54 +487,41 @@ def train_kmeans_codebook(
     refined small state; it is NOT a driver-side loop over data.
 
     Determinism: seeds are the data vectors with the k smallest
-    md5(vec-bytes) digests (stable across runs/partitionings); argmax
-    assignment and double-precision sums are order-free; empty cells
-    keep their previous centroid.
-
-    REPLAYABLE mode (both params set): ``id_col`` switches the seed key
-    to md5("seed:" || id) — a pure function of the row id that any
-    engine recomputes, unlike Spark's to_json double rendering — and
-    ``sum_quantize`` snaps each per-(cell, position) sum to that grid
-    (e.g. 1e-6) so partial-aggregation merge order cannot leak ulp
-    drift into the codebook. With both set, training is a deterministic
-    function of the (id, vector) multiset, and
+    md5("seed:" || id) digests — a pure function of the row id that
+    any engine recomputes; argmax assignment is order-free, each
+    per-(cell, position) sum snaps to ``_SUM_GRID``, and empty cells
+    keep their previous centroid. Training is therefore a
+    deterministic function of the (id, vector) multiset, and
     :func:`replay_kmeans_codebook` reproduces it bit-for-bit outside
     Spark — which is what lets the trained-IVF query carry a generated
-    DuckDB oracle (grid-boundary caveat: a sum landing within ulps of a
-    half-grid point could round apart; same accepted risk as the
-    quantized-NLL oracle in plans/text.py).
+    DuckDB oracle.
 
     ``broadcast_assign`` (default ``None`` = select by k, see
-    :func:`_resolve_assign_mode`; ``True`` requires ``id_col``) routes
-    each Lloyd round's assignment through the broadcast-codebook join
-    of :func:`assign_cells_broadcast` instead of the codebook-literal
+    :func:`_resolve_assign_mode`) routes each Lloyd round's assignment
+    through the broadcast-codebook join of
+    :func:`assign_cells_broadcast` instead of the codebook-literal
     expression — mandatory once k×dim outgrows a literal (a k=2000×64
     codebook is a 128 000-literal expression; plan size and codegen
     grow with k). Dot arithmetic and first-max tiebreak are identical
     to the literal path (the same sequential ``zip_with`` fold; max_by
-    over (score, −cell)), so with ``sum_quantize`` set — which absorbs
-    the only remaining difference, partial-aggregation merge order in
-    the per-(cell, position) sums — both paths train the IDENTICAL
-    codebook (pytest-pinned, tests/test_round8_ops.py).
+    over (score, −cell)), and the sum grid absorbs the only remaining
+    difference, partial-aggregation merge order in the per-(cell,
+    position) sums, so both paths train the IDENTICAL codebook
+    (pytest-pinned, tests/test_round8_ops.py).
     """
     if init not in ("md5", "farthest"):
         raise ValueError(f"init must be 'md5' or 'farthest', got {init!r}")
-    broadcast_assign = _resolve_assign_mode(
-        n_centroids, id_col, broadcast_assign
-    )
+    broadcast_assign = _resolve_assign_mode(n_centroids, broadcast_assign)
     # bind the norm to its own column BEFORE the per-position lambda —
     # an aggregate referenced inside transform() re-evaluates per
     # position (the O(dim^2) trap)
-    base_cols = [F.col(vec_col).alias("_v")] + (
-        [F.col(id_col).alias("_id")] if id_col is not None else []
-    )
     vecs = (
-        df.select(*base_cols)
+        df.select(F.col(vec_col).alias("_v"), F.col(id_col).alias("_id"))
         .withColumn("_n", F.greatest(l2_norm(F.col("_v")), F.lit(1e-12)))
         .withColumn(
             "_uv", F.transform("_v", lambda x: x.cast("double") / F.col("_n"))
         )
-        .select(*(["_uv"] + (["_id"] if id_col is not None else [])))
+        .select("_uv", "_id")
         .cache()
     )
     if init == "farthest":
@@ -564,12 +534,7 @@ def train_kmeans_codebook(
             df, vec_col, n_centroids, id_col=id_col
         )
     else:
-        if id_col is not None:
-            seed_key = F.md5(
-                F.concat(F.lit("seed:"), F.col("_id").cast("string"))
-            )
-        else:
-            seed_key = F.md5(F.to_json(F.struct(F.col("_uv"))).cast("binary"))
+        seed_key = F.md5(F.concat(F.lit("seed:"), F.col("_id").cast("string")))
         seeds = [
             r["_uv"]
             for r in vecs.select("_uv", seed_key.alias("_k"))
@@ -627,10 +592,7 @@ def train_kmeans_codebook(
         touched = [False] * n_centroids
         for r in sums:
             for i in range(dim):
-                s = r[f"s{i}"]
-                if sum_quantize:
-                    s = round(s / sum_quantize) * sum_quantize
-                acc[r["_cell"]][i] = s
+                acc[r["_cell"]][i] = _snap_sum(r[f"s{i}"])
             touched[r["_cell"]] = True
         cents = _renormalize_cells(cents, acc, touched)
     vecs.unpersist()
@@ -641,12 +603,11 @@ def replay_kmeans_codebook(
     rows: list[tuple],
     n_centroids: int = 8,
     n_iter: int = 3,
-    sum_quantize: float = 1e-6,
 ) -> list[list[float]]:
-    """Pure-Python replay of :func:`train_kmeans_codebook` in replayable
-    mode (``id_col`` + ``sum_quantize``), used to GENERATE the trained-
-    IVF DuckDB oracle without a SparkSession: re-derive the codebook
-    from the raw (id, vector) rows, then render it as SQL literals.
+    """Pure-Python replay of :func:`train_kmeans_codebook`, used to
+    GENERATE the trained-IVF DuckDB oracle without a SparkSession:
+    re-derive the codebook from the raw (id, vector) rows, then render
+    it as SQL literals.
 
     Mirrors the engine step for step with matching float semantics:
     sequential index-ordered folds (Spark's zip_with/aggregate),
@@ -693,11 +654,7 @@ def replay_kmeans_codebook(
             for d in range(dim):
                 cell[d] += uv[d]
             touched[bi] = True
-        if sum_quantize:
-            acc = [
-                [round(v / sum_quantize) * sum_quantize for v in row]
-                for row in acc
-            ]
+        acc = [[_snap_sum(v) for v in row] for row in acc]
         cents = _renormalize_cells(cents, acc, touched)
     return cents
 
@@ -1192,7 +1149,6 @@ def train_pq_codebooks(
     dim: int = 64,
     n_iter: int = 3,
     id_col: str = "vec_id",
-    sum_quantize: float | None = 1e-6,
 ) -> list[list[list[float]]]:
     """Per-subspace TRAINED PQ codebooks (classic L2 Lloyd, not the
     spherical variant — PQ assigns by squared L2 and updates by MEAN,
@@ -1219,9 +1175,8 @@ def train_pq_codebooks(
     corpus size; at 100 TB the caller passes a sampled ``df`` and this
     stays O(sample) per round.
 
-    REPLAYABLE like the spherical trainer: id-derived seeds plus
-    ``sum_quantize`` (snapping each per-(cell, position) sum so
-    partial-aggregation merge order cannot leak ulp drift; counts are
+    Replayable like the spherical trainer: id-derived seeds plus the
+    ``_SUM_GRID`` snap of each per-(cell, position) sum (counts are
     exact integers and the mean is one double division) make the books
     a deterministic function of the (id, vector) multiset —
     :func:`replay_pq_codebooks` reproduces them bit-for-bit outside
@@ -1303,13 +1258,9 @@ def train_pq_codebooks(
         )
         new_books = [[list(c) for c in bk] for bk in books]
         for r in rows:
-            acc = []
-            for d in range(sub_dim):
-                s = r[f"s{d}"]
-                if sum_quantize:
-                    s = round(s / sum_quantize) * sum_quantize
-                acc.append(s / r["_n"])
-            new_books[r["_m"]][r["_cell"]] = acc
+            new_books[r["_m"]][r["_cell"]] = [
+                _snap_sum(r[f"s{d}"]) / r["_n"] for d in range(sub_dim)
+            ]
         books = new_books
     subs.unpersist()
     return books
@@ -1320,7 +1271,6 @@ def replay_pq_codebooks(
     m_sub: int = 8,
     k_codes: int = 16,
     n_iter: int = 3,
-    sum_quantize: float = 1e-6,
 ) -> list[list[list[float]]]:
     """Pure-Python replay of :func:`train_pq_codebooks` — the PQ
     analogue of :func:`replay_kmeans_codebook`, used to GENERATE the
@@ -1375,13 +1325,9 @@ def replay_pq_codebooks(
             for c in range(k_actual):
                 if not counts[c]:
                     continue
-                acc = []
-                for d in range(sub_dim):
-                    s = sums[c][d]
-                    if sum_quantize:
-                        s = round(s / sum_quantize) * sum_quantize
-                    acc.append(s / counts[c])
-                new_book[c] = acc
+                new_book[c] = [
+                    _snap_sum(sums[c][d]) / counts[c] for d in range(sub_dim)
+                ]
             book = new_book
         books.append(book)
     return books

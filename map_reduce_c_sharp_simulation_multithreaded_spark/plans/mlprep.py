@@ -283,32 +283,24 @@ def contamination_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination costs one scan of the training corpus. The verify
     join is candidate-bounded (LSH bucket hits only, never n²).
 
-    Runs the md5-derived oracle-mode hash family (shared CTE prefix
-    with dedup_minhash_lsh — plans.dedup._MINHASH_CTES — so the
-    replayed signature stage cannot drift between the two oracles);
-    xxhash64 stays the production default in the underlying operators.
+    The md5-derived hash family is replayed by a CTE prefix shared
+    with dedup_minhash_lsh (plans.dedup._MINHASH_CTES), so the
+    signature stage cannot drift between the two oracles.
     """
     d = load_table(spark, sf_dir, "documents")
     return _fuzzy_contam_audit(d)
 
 
-def _fuzzy_contam_audit(d: DataFrame, hash_mode: str = "md5") -> DataFrame:
+def _fuzzy_contam_audit(d: DataFrame) -> DataFrame:
     """The plan body over an arbitrary ``(doc_id, text)`` frame —
-    separated so the planted-contamination pytest can drive it.
-    ``hash_mode`` follows the family discipline of the near-dup
-    pipeline: "md5" (default here — the registered query wants the
-    DuckDB-replayable family) or "xxhash64" (the production family —
-    semantics-equivalence pinned in pytest, same as
-    dedup_minhash_lsh's)."""
+    separated so the planted-contamination pytest can drive it."""
     # Shingle sets feed both verify probes; signatures feed the banding
     # once — same one-materialization discipline as the near-dup query.
-    sets_df = doc_shingle_sets(d, "doc_id", "text", 3, hash_mode).cache()
+    sets_df = doc_shingle_sets(d, "doc_id", "text", 3).cache()
     sig = minhash_signatures(
         sets_df.select("doc_id", "sh_set"), "doc_id", 32
     ).drop("sh_set")
-    banded = lsh_banded(
-        sig, "doc_id", bands=8, rows=4, hash_mode=hash_mode
-    )
+    banded = lsh_banded(sig, "doc_id", bands=8, rows=4)
     is_eval = F.col("doc_id") % 20 == 7
     ev = banded.filter(is_eval).select(
         F.col("doc_id").alias("id_b"), "band_id", "bh"
@@ -321,7 +313,7 @@ def _fuzzy_contam_audit(d: DataFrame, hash_mode: str = "md5") -> DataFrame:
         .select("id_a", "id_b")
         .distinct()
     )
-    verified = exact_jaccard(cand, sets_df, "doc_id", scaled=True)
+    verified = exact_jaccard(cand, sets_df, "doc_id")
     return (
         verified.filter(F.col("jaccard_e4") >= 8000)
         .groupBy("id_a")

@@ -502,7 +502,7 @@ def _trained_ivf_oracle(sf_dir: str) -> str:
     ).fetchall()
     con.close()
     cents = replay_kmeans_codebook(
-        rows, n_centroids=8, n_iter=3, sum_quantize=1e-6
+        rows, n_centroids=8, n_iter=3
     )
     return _ivf_oracle(8, 2, 64, centroids=cents, k=5)
 
@@ -532,7 +532,7 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embeddings", (8, 3, 64),
         lambda: train_kmeans_codebook(
             e, "embedding", n_centroids=8, n_iter=3, dim=64,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         ),
     )
     return ivf_topk(
@@ -838,7 +838,7 @@ def _trained_semdedup_codebook(emb: DataFrame, sf_dir: str) -> list[list[float]]
         "embeddings", ("semdedup", k, 3, 64),
         lambda: train_kmeans_codebook(
             emb, "embedding", n_centroids=k, n_iter=3, dim=64,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         ),
     )
 
@@ -865,7 +865,7 @@ def _semantic_dedup_trained_oracle(sf_dir: str) -> str:
     ).fetchall()
     con.close()
     cents = replay_kmeans_codebook(
-        rows, n_centroids=k, n_iter=3, sum_quantize=1e-6
+        rows, n_centroids=k, n_iter=3
     )
     return _semantic_dedup_oracle(centroids=cents)
 
@@ -1279,7 +1279,7 @@ def _trained_pq_books(
         "embeddings", ("pq", 8, 16, 3),
         lambda: train_pq_codebooks(
             e, "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         ),
     )
 
@@ -1300,7 +1300,7 @@ def _trained_ivfpq_oracle(sf_dir: str) -> str:
     ).fetchall()
     con.close()
     books = replay_pq_codebooks(
-        rows, m_sub=8, k_codes=16, n_iter=3, sum_quantize=1e-6
+        rows, m_sub=8, k_codes=16, n_iter=3
     )
     return _ivfpq_oracle(k=5, books=books)
 
@@ -1361,7 +1361,7 @@ def _trained_residual_pq_books(
                 e, _deterministic_centroids(16, 64), "vec_id", "embedding"
             ),
             "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         ),
     )
 
@@ -1387,7 +1387,7 @@ def _residual_ivfpq_oracle(sf_dir: str) -> str:
     con.close()
     resid = replay_residual_rows(rows, _deterministic_centroids(16, 64))
     books = replay_pq_codebooks(
-        resid, m_sub=8, k_codes=16, n_iter=3, sum_quantize=1e-6
+        resid, m_sub=8, k_codes=16, n_iter=3
     )
     return _ivfpq_oracle(k=5, books=books, residual=True)
 

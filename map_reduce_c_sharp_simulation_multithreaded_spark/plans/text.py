@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.dedup import md5hash60
+from ..session import _shuffle_partitions
 from .dedup import _md5hash60_sql
 from ..operators.text import (
     CM_HASH_FAMILY,
@@ -1102,13 +1103,14 @@ def _index_shard_count(spark: SparkSession) -> int:
     the documented scaling knob (ADVICE r12): a stopword term's rows
     (and its phase-1 collect_list buffer, O(rows_per_term / shards)
     structs in one non-spillable agg buffer) divide across this many
-    tasks, so it must scale with cluster width. Default: the session's
-    ``defaultParallelism`` (32 under the bench's local[32], 1000s on
-    a real cluster), floored at 16 so a narrow test session still
+    tasks, so it must scale with cluster width. It is the session's
+    shuffle-width rule (``session._shuffle_partitions``) applied to
+    ``defaultParallelism``: the core count floored at 16 (16 at 4
+    cores, 1000s on a real cluster), so a narrow test session still
     exercises the sharded shape. Result-invariant by construction —
     phase 2 re-merges to the exact first-20-by-doc_id for ANY shard
     count ≥ 1."""
-    return max(16, spark.sparkContext.defaultParallelism)
+    return _shuffle_partitions(spark.sparkContext.defaultParallelism)
 
 
 @register(
@@ -1158,7 +1160,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(rows_per_term/S) non-spillable phase-1 buffer) across S
     tasks — and phase 2 merges ≤ S×20 survivors per term, a bounded
     array; S comes from :func:`_index_shard_count` (defaultParallelism,
-    floored at 16), so the documented scaling knob exists as a
+    floored at 16 by the session's shuffle-width rule), so the documented scaling knob exists as a
     parameter, not a literal. df/total_tf aggregate the UNCAPPED
     (tok, doc)
     table with plain combiner-friendly aggregates; tf is CACHED so

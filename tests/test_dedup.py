@@ -48,11 +48,11 @@ def test_exact_dedup_keeps_lowest_id(docs):
 
 def test_minhash_lsh_finds_planted_pair(docs):
     pairs = {
-        (r.id_a, r.id_b): r.jaccard
+        (r.id_a, r.id_b): r.jaccard_e4
         for r in minhash_lsh_dedup_pairs(docs, "doc_id", "text", threshold=0.5).collect()
     }
-    assert (1, 2) in pairs and pairs[(1, 2)] == 1.0  # exact dup
-    assert (1, 3) in pairs and pairs[(1, 3)] >= 0.5  # near dup survives verify
+    assert (1, 2) in pairs and pairs[(1, 2)] == 10000  # exact dup
+    assert (1, 3) in pairs and pairs[(1, 3)] >= 5000  # near dup survives verify
     assert all(4 not in p and 5 not in p for p in pairs)  # no false positives
 
 

@@ -379,7 +379,7 @@ class TestFuzzyContamination:
             (r.doc_id, r.n_eval_neardups, r.top_jaccard_e4)
             for r in _fuzzy_contam_audit(d).collect()
         }
-        sets = doc_shingle_sets(d, "doc_id", "text", 3, "md5")
+        sets = doc_shingle_sets(d, "doc_id", "text", 3)
         tr = sets.filter(F.col("doc_id") % 20 != 7).select(
             F.col("doc_id").alias("id_a"), F.col("sh_set").alias("sa")
         )
@@ -487,13 +487,12 @@ class TestScalableSeeding:
         far = seed_kmeans_scalable(p, "embedding", 16, id_col="vec_id")
         uni = train_kmeans_codebook(
             p, "embedding", 16, n_iter=0, id_col="vec_id",
-            sum_quantize=1e-6,
         )
         assert self._coverage(far) > self._coverage(uni)
         assert self._coverage(far) >= 13
         trained = train_kmeans_codebook(
             p, "embedding", 16, n_iter=1, id_col="vec_id",
-            sum_quantize=1e-6, init="farthest",
+            init="farthest",
         )
         assert self._coverage(trained) >= 15
         p.unpersist()
@@ -509,11 +508,10 @@ class TestScalableSeeding:
         p = self._planted(spark, sf_dir)
         a = train_kmeans_codebook(
             p, "embedding", 8, n_iter=2, id_col="vec_id",
-            sum_quantize=1e-6,
         )
         b = train_kmeans_codebook(
             p, "embedding", 8, n_iter=2, id_col="vec_id",
-            sum_quantize=1e-6, init="md5",
+            init="md5",
         )
         assert a == b
 
@@ -657,30 +655,10 @@ class TestScalableSeedingBroadcastPath:
         )
         assert lit == bc
 
-    def test_broadcast_requires_id(self, spark, sf_dir):
-        import pytest as _pytest
-
-        from map_reduce_c_sharp_simulation_multithreaded_spark.catalog import (
-            load_table,
-        )
-        from map_reduce_c_sharp_simulation_multithreaded_spark.operators.similarity import (
-            seed_kmeans_scalable,
-        )
-
-        e = load_table(spark, sf_dir, "embeddings")
-        with _pytest.raises(ValueError, match="id_col"):
-            seed_kmeans_scalable(
-                e, "embedding", 16, broadcast_score=True
-            )
-
 
 class TestFuzzyContaminationFamilySwap:
-    """The hash-family discipline (round 5): the registered query runs
-    the md5 oracle-mode family; production runs xxhash64. The swap is
-    a parameter, proven semantics-preserving on planted data — both
-    families must flag the same docs with the same Jaccard values
-    (signatures differ, but verbatim/near-verbatim overlap of shingle
-    SETS does not depend on which 60/64-bit hash named the shingles)."""
+    """The fuzzy audit on planted data: the verbatim copy scores
+    10000, the light edit is flagged, the unrelated doc is not."""
 
     def test_both_families_agree_on_planted_data(self, spark):
         from map_reduce_c_sharp_simulation_multithreaded_spark.plans.mlprep import (
@@ -692,12 +670,9 @@ class TestFuzzyContaminationFamilySwap:
         other = " ".join(f"v{i}" for i in range(40))
         rows = [(7, base), (1, base), (2, light), (3, other)]
         d = spark.createDataFrame(rows, "doc_id long, text string")
-        out = {}
-        for fam in ("md5", "xxhash64"):
-            out[fam] = {
-                r.doc_id: (r.n_eval_neardups, r.top_jaccard_e4)
-                for r in _fuzzy_contam_audit(d, hash_mode=fam).collect()
-            }
-        assert out["md5"] == out["xxhash64"]
-        assert out["md5"][1] == (1, 10000)  # verbatim copy
-        assert 1 in out["md5"] and 2 in out["md5"] and 3 not in out["md5"]
+        out = {
+            r.doc_id: (r.n_eval_neardups, r.top_jaccard_e4)
+            for r in _fuzzy_contam_audit(d).collect()
+        }
+        assert out[1] == (1, 10000)  # verbatim copy
+        assert 2 in out and 3 not in out

@@ -316,7 +316,7 @@ def test_term_counts_rows_match_explode_groupby(spark):
 
 @pytest.mark.usefixtures("spark")
 def test_simhash_md5_vectorized_matches_aggregate_form(spark):
-    """The r14 vectorized md5-mode simhash must emit the identical
+    """The vectorized simhash must emit the identical
     longs as the 60-way ±1-vote aggregation, including the zero-token
     row-drop contract."""
     from pyspark.sql import functions as F
@@ -325,8 +325,7 @@ def test_simhash_md5_vectorized_matches_aggregate_form(spark):
         dedup as D,
     )
     from map_reduce_c_sharp_simulation_multithreaded_spark.operators.dedup import (
-        _sig_bits,
-        _token_hash,
+        md5hash60,
     )
     from map_reduce_c_sharp_simulation_multithreaded_spark.operators.text import (
         tokens,
@@ -342,10 +341,10 @@ def test_simhash_md5_vectorized_matches_aggregate_form(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # reference: the original explode + 60-way aggregate, inlined
-    n_bits = _sig_bits("md5")
+    n_bits = 60
     tok = df.select(
         F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("_t")
-    ).select("doc_id", _token_hash(F.col("_t"), "md5").alias("_h"))
+    ).select("doc_id", md5hash60(F.col("_t")).alias("_h"))
     bit_sums = tok.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -369,7 +368,7 @@ def test_simhash_md5_vectorized_matches_aggregate_form(spark):
     }
     new = {
         r["doc_id"]: r["simhash"]
-        for r in D.simhash64(df, "doc_id", "text", "md5").collect()
+        for r in D.simhash64(df, "doc_id", "text").collect()
     }
     assert new == old
     assert set(new) == {1, 4, 5, 6}  # empty-token docs emit no row

@@ -39,67 +39,6 @@ def test_md5hash60_matches_duckdb(spark):
     con.close()
 
 
-def test_minhash_md5_mode_finds_planted_pair(spark):
-    """The oracle-mode family preserves the pipeline semantics the
-    production (xxhash64) family is pinned to: exact dup at
-    jaccard_e4=10000, near dup above threshold, no false positives."""
-    from map_reduce_c_sharp_simulation_multithreaded_spark.operators.dedup import (
-        minhash_lsh_dedup_pairs,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog near the quiet river "
-        "bank every single morning before the sun rises over the hills"
-    )
-    near = base.replace("quiet river", "silent river")
-    docs = spark.createDataFrame(
-        [(1, base), (2, base), (3, near), (4, "completely different text "
-         "about distributed query engines and shuffle partitioning at scale")],
-        "doc_id long, text string",
-    )
-    pairs = {
-        (r.id_a, r.id_b): r.jaccard_e4
-        for r in minhash_lsh_dedup_pairs(
-            docs, "doc_id", "text", threshold=0.5, hash_mode="md5", scaled=True
-        ).collect()
-    }
-    assert pairs[(1, 2)] == 10000
-    assert (1, 3) in pairs and pairs[(1, 3)] >= 5000
-    assert all(4 not in p for p in pairs)
-
-
-def test_simhash_md5_mode_band_pairs_equal_brute_force(spark, sf_dir):
-    """Pigeonhole recall holds for the 60-bit oracle-mode signature
-    exactly as for the 64-bit production one: 4×15-bit banded join +
-    hamming verify == all-pairs hamming<=3."""
-    from map_reduce_c_sharp_simulation_multithreaded_spark.catalog import load_table
-    from map_reduce_c_sharp_simulation_multithreaded_spark.operators.dedup import (
-        hamming64,
-        simhash64,
-        simhash_band_pairs,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    banded = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_band_pairs(
-            d, "doc_id", "text", 3, 4, hash_mode="md5"
-        ).collect()
-    }
-    sig = simhash64(d, "doc_id", "text", hash_mode="md5")
-    a = sig.select(F.col("doc_id").alias("ia"), F.col("simhash").alias("sa"))
-    b = sig.select(F.col("doc_id").alias("ib"), F.col("simhash").alias("sb"))
-    brute = {
-        (r.ia, r.ib): r.h
-        for r in a.join(b, F.col("ia") < F.col("ib"))
-        .select("ia", "ib", hamming64(F.col("sa"), F.col("sb")).alias("h"))
-        .filter(F.col("h") <= 3)
-        .collect()
-    }
-    assert banded == brute
-    assert len(brute) > 0
-
-
 def test_trained_codebook_replay_matches_spark(spark, sf_dir):
     """The generated trained-IVF oracle stands on this: k-means in
     replayable mode (id-derived seeds + 1e-6 sum grid) is a
@@ -114,7 +53,7 @@ def test_trained_codebook_replay_matches_spark(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     spark_cents = train_kmeans_codebook(
         e, "embedding", n_centroids=8, n_iter=3, dim=64,
-        id_col="vec_id", sum_quantize=1e-6,
+        id_col="vec_id",
     )
     con = duckdb.connect()
     rows = con.execute(
@@ -123,7 +62,7 @@ def test_trained_codebook_replay_matches_spark(spark, sf_dir):
     ).fetchall()
     con.close()
     replay_cents = replay_kmeans_codebook(
-        rows, n_centroids=8, n_iter=3, sum_quantize=1e-6
+        rows, n_centroids=8, n_iter=3
     )
     assert spark_cents == replay_cents
 

@@ -46,7 +46,7 @@ def test_semdedup_trained_codebook_replay_equal(spark, sf_dir):
     ).fetchall()
     con.close()
     replay_cents = replay_kmeans_codebook(
-        rows, n_centroids=k, n_iter=3, sum_quantize=1e-6
+        rows, n_centroids=k, n_iter=3
     )
     assert spark_cents == replay_cents
     assert len(spark_cents) == k
@@ -88,7 +88,7 @@ def test_semdedup_trained_occupancy_tighter_than_sha(spark, sf_dir):
     sha_used, sha_ssq = stats(_deterministic_centroids(k, 64))
     trained = train_kmeans_codebook(
         emb, "embedding", n_centroids=k, n_iter=3, dim=64,
-        id_col="vec_id", sum_quantize=1e-6,
+        id_col="vec_id",
     )
     tr_used, tr_ssq = stats(trained)
     assert tr_used >= sha_used  # fewer (or equal) empty cells

@@ -28,7 +28,7 @@ def test_broadcast_assign_training_equals_literal(spark, sf_dir):
     IDENTICAL codebook as the literal-expression path at the same
     (seeds, k, n_iter, grid): the dot is the same sequential zip_with
     fold, the argmax tiebreak is first-max == max_by(score, −cell),
-    and sum_quantize absorbs the only legal difference (partial-agg
+    and the sum grid absorbs the only legal difference (partial-agg
     merge order in the per-(cell, position) sums). This equality is
     what lets the 64× trained-occupancy row (k=2000, trained via the
     broadcast path — a 128k-literal expression otherwise) stand in
@@ -41,27 +41,13 @@ def test_broadcast_assign_training_equals_literal(spark, sf_dir):
     for k in (8, 31):
         literal = train_kmeans_codebook(
             emb, "embedding", n_centroids=k, n_iter=3, dim=64,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         )
         broadcast = train_kmeans_codebook(
             emb, "embedding", n_centroids=k, n_iter=3, dim=64,
-            id_col="vec_id", sum_quantize=1e-6, broadcast_assign=True,
+            id_col="vec_id", broadcast_assign=True,
         )
         assert literal == broadcast, f"codebooks diverge at k={k}"
-
-
-def test_broadcast_assign_requires_id_col(spark, sf_dir):
-    import pytest
-
-    from map_reduce_c_sharp_simulation_multithreaded_spark.operators.similarity import (
-        train_kmeans_codebook,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="id_col"):
-        train_kmeans_codebook(
-            emb, "embedding", n_centroids=8, broadcast_assign=True
-        )
 
 
 def test_multimodal_pipeline_keep_best_contract(spark, sf_dir):

@@ -12,32 +12,19 @@ from map_reduce_c_sharp_simulation_multithreaded_spark.operators.similarity impo
 
 
 class TestAssignModeCutover:
-    """The trainer selects by k when broadcast_assign is None: literal
-    up to the documented cutover, broadcast (requiring id_col) above —
-    and validation happens in this pure helper BEFORE any Spark job
-    (ADVICE r8: the old in-loop check wasted the seed-selection scan
-    on an argument error)."""
+    """The trainer and the seeder select by k when the override is
+    None: literal up to the documented cutover, broadcast above."""
 
     def test_default_literal_below_cutover(self):
-        assert _resolve_assign_mode(8, None, None) is False
-        assert _resolve_assign_mode(BROADCAST_ASSIGN_CUTOVER_K, None, None) is False
+        assert _resolve_assign_mode(8, None) is False
+        assert _resolve_assign_mode(BROADCAST_ASSIGN_CUTOVER_K, None) is False
 
     def test_default_broadcast_above_cutover(self):
-        assert _resolve_assign_mode(
-            BROADCAST_ASSIGN_CUTOVER_K + 1, "vec_id", None
-        ) is True
-        assert _resolve_assign_mode(2000, "vec_id", None) is True
-
-    def test_above_cutover_without_id_col_refuses_literal_silently(self):
-        with pytest.raises(ValueError, match="cutover"):
-            _resolve_assign_mode(2000, None, None)
+        assert _resolve_assign_mode(BROADCAST_ASSIGN_CUTOVER_K + 1, None) is True
+        assert _resolve_assign_mode(2000, None) is True
 
     def test_explicit_false_is_the_escape_hatch(self):
-        assert _resolve_assign_mode(2000, None, False) is False
-
-    def test_explicit_true_requires_id_col(self):
-        with pytest.raises(ValueError, match="id_col"):
-            _resolve_assign_mode(8, None, True)
+        assert _resolve_assign_mode(2000, False) is False
 
 
 class TestPlantedRecall:
@@ -137,14 +124,14 @@ class TestTrainedPQ:
         e = load_table(spark, sf_dir, "embeddings")
         trained = train_pq_codebooks(
             e, "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         )
         rows = duckdb.sql(
             "SELECT vec_id, embedding FROM "
             f"read_parquet('{sf_dir}/embeddings.parquet') ORDER BY vec_id"
         ).fetchall()
         replayed = replay_pq_codebooks(
-            rows, m_sub=8, k_codes=16, n_iter=3, sum_quantize=1e-6
+            rows, m_sub=8, k_codes=16, n_iter=3
         )
         assert trained == replayed
 
@@ -185,7 +172,7 @@ class TestTrainedPQ:
         sha = recall(None)  # the measured ~0.61 plateau
         trained_books = train_pq_codebooks(
             corpus, "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         )
         lifted = recall(trained_books)
         corpus.unpersist()
@@ -217,7 +204,7 @@ class TestResidualIVFPQ:
         trained = train_pq_codebooks(
             residual_frame(e, cents, "vec_id", "embedding"),
             "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         )
         rows = duckdb.sql(
             "SELECT vec_id, embedding FROM "
@@ -225,7 +212,7 @@ class TestResidualIVFPQ:
         ).fetchall()
         replayed = replay_pq_codebooks(
             replay_residual_rows(rows, cents),
-            m_sub=8, k_codes=16, n_iter=3, sum_quantize=1e-6,
+            m_sub=8, k_codes=16, n_iter=3,
         )
         assert trained == replayed
 
@@ -269,7 +256,7 @@ class TestResidualIVFPQ:
         resid_books = train_pq_codebooks(
             residual_frame(corpus, block, "vec_id", "embedding"),
             "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-            id_col="vec_id", sum_quantize=1e-6,
+            id_col="vec_id",
         )
         lifted = recall(resid_books, True)
         corpus.unpersist()

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_c_sharp_simulation_multithreaded_spark.catalog import load_table
 from map_reduce_c_sharp_simulation_multithreaded_spark.schemas import EVENTS
+from map_reduce_c_sharp_simulation_multithreaded_spark.session import conf_scope
 
 
 def test_partitioned_parquet_roundtrip_and_pruning(spark, sf_dir, tmp_path):
@@ -51,12 +52,8 @@ def test_dynamic_partition_overwrite_replaces_only_touched(
 
     # backfill 1995 with a filtered (halved) frame under dynamic mode
     patch = o.filter((F.col("yr") == 1995) & (F.col("o_orderkey") % 2 == 0))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         patch.write.mode("overwrite").partitionBy("yr").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     after = {
         r.yr: r.cnt
@@ -96,28 +93,27 @@ def test_bucketed_table_join_without_exchange(spark, sf_dir, tmp_path):
     ).saveAsTable("bt_orders")
     bc = spark.table("bt_customer")
     bo = spark.table("bt_orders")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bo.join(bc, bo.o_custkey == bc.c_custkey).groupBy(
-            "c_mktsegment"
-        ).count()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # the join itself must not re-shuffle its bucketed inputs
-        join_part = plan.split("HashAggregate")[-1]
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange hashpartitioning(o_custkey" not in join_part
-        assert "Exchange hashpartitioning(c_custkey" not in join_part
-        rows = {r.c_mktsegment: r["count"] for r in joined.collect()}
-        expected = {
-            r.c_mktsegment: r["count"]
-            for r in o.join(c, o.o_custkey == c.c_custkey)
-            .groupBy("c_mktsegment")
-            .count()
-            .collect()
-        }
-        assert rows == expected
+        with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = bo.join(bc, bo.o_custkey == bc.c_custkey).groupBy(
+                "c_mktsegment"
+            ).count()
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            # the join itself must not re-shuffle its bucketed inputs
+            join_part = plan.split("HashAggregate")[-1]
+            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+            assert "Exchange hashpartitioning(o_custkey" not in join_part
+            assert "Exchange hashpartitioning(c_custkey" not in join_part
+            rows = {r.c_mktsegment: r["count"] for r in joined.collect()}
+            expected = {
+                r.c_mktsegment: r["count"]
+                for r in o.join(c, o.o_custkey == c.c_custkey)
+                .groupBy("c_mktsegment")
+                .count()
+                .collect()
+            }
+            assert rows == expected
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.sql("DROP TABLE IF EXISTS bt_customer")
         spark.sql("DROP TABLE IF EXISTS bt_orders")
 
@@ -154,22 +150,20 @@ def test_bucket_pruning_reads_single_bucket(spark, sf_dir):
     # a bare filter gives the planner no partitioning requirement, so
     # auto-bucketed-scan would fall back to a plain scan and skip the
     # pruning this test demonstrates
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-                   "false")
     try:
-        probe = spark.table("bp_orders").filter(F.col("o_custkey") == 37)
-        plan = probe._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
+        with conf_scope(
+            spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+        ):
+            probe = spark.table("bp_orders").filter(F.col("o_custkey") == 37)
+            plan = probe._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
             )
-        )
-        assert "SelectedBucketsCount: 1 out of 8" in plan, plan[:800]
-        expected = o.filter(F.col("o_custkey") == 37).count()
-        assert probe.count() == expected
+            assert "SelectedBucketsCount: 1 out of 8" in plan, plan[:800]
+            expected = o.filter(F.col("o_custkey") == 37).count()
+            assert probe.count() == expected
     finally:
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
-        )
         spark.sql("DROP TABLE IF EXISTS bp_orders")
 
 

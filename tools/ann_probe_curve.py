@@ -121,7 +121,7 @@ def main() -> int:
     t0 = time.perf_counter()
     trained = train_kmeans_codebook(
         corpus, "embedding", n_centroids=16, n_iter=3, dim=64,
-        id_col="vec_id", sum_quantize=1e-6,
+        id_col="vec_id",
     )
     buildstats.record_build(
         "kmeans_codebook", time.perf_counter() - t0, "ann_probe_curve k=16"
@@ -131,7 +131,7 @@ def main() -> int:
     t0 = time.perf_counter()
     trained_far = train_kmeans_codebook(
         corpus, "embedding", n_centroids=16, n_iter=1, dim=64,
-        id_col="vec_id", sum_quantize=1e-6, init="farthest",
+        id_col="vec_id", init="farthest",
     )
     buildstats.record_build(
         "kmeans_codebook", time.perf_counter() - t0,
@@ -150,7 +150,7 @@ def main() -> int:
     t0 = time.perf_counter()
     trained_books = train_pq_codebooks(
         corpus, "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-        id_col="vec_id", sum_quantize=1e-6,
+        id_col="vec_id",
     )
     buildstats.record_build(
         "pq_codebooks", time.perf_counter() - t0, "ann_probe_curve m=8 k=16"
@@ -170,7 +170,7 @@ def main() -> int:
     resid_books = train_pq_codebooks(
         residual_frame(corpus, block, "vec_id", "embedding"),
         "embedding", m_sub=8, k_codes=16, dim=64, n_iter=3,
-        id_col="vec_id", sum_quantize=1e-6,
+        id_col="vec_id",
     )
     buildstats.record_build(
         "pq_codebooks", time.perf_counter() - t0,

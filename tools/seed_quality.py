@@ -81,7 +81,6 @@ def main() -> None:
         else:
             seeds = train_kmeans_codebook(
                 planted, "embedding", args.k, n_iter=0, id_col="vec_id",
-                sum_quantize=1e-6,
             )
         seed_sec = time.time() - t0
         row = {
@@ -92,7 +91,7 @@ def main() -> None:
             t0 = time.time()
             cents = train_kmeans_codebook(
                 planted, "embedding", args.k, n_iter=n_iter,
-                id_col="vec_id", sum_quantize=1e-6, init=init,
+                id_col="vec_id", init=init,
             )
             row[f"iter{n_iter}"] = {
                 "coverage": len({dominant_block(c) for c in cents}),

@@ -77,7 +77,7 @@ def trained_cells(emb, k: int, init: str = "md5"):
 
     cents = train_kmeans_codebook(
         emb, "embedding", n_centroids=k, n_iter=3, dim=64,
-        id_col="vec_id", sum_quantize=1e-6, init=init,
+        id_col="vec_id", init=init,
     )  # assignment mode selected by k (the trainer's cutover default)
     return assign_cells_broadcast(emb, "embedding", cents)
 
